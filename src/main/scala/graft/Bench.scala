@@ -426,10 +426,11 @@ object Bench {
             primed()
           }
         // WARM-ONCE: run the query once UNTIMED before any counted
-        // sample. Round 13's job-level CPU attribution (PairServeProbe)
-        // showed the pair-family "CPU regressions" were warmup
-        // position, not engine change: a query plan's scan/codegen path
-        // reaches JIT steady state only on its ~3rd execution
+        // sample. Round 13's job-level CPU attribution (PLANS.md,
+        // session 7 addendum 2) showed the pair-family "CPU
+        // regressions" were warmup position, not engine change: a
+        // query plan's scan/codegen path reaches JIT steady state only
+        // on its ~3rd execution
         // (containment serving: 4.4 → 1.8 → 0.25 CPU-s on identical
         // primed state), so which query absorbed the tier-up depended
         // on run order and sampling luck — floors recorded steady
@@ -506,7 +507,7 @@ object Bench {
           results(name) = best
           // the regress gate's CPU axis reads the BEST CPU any sample
           // showed, not the min-WALL sample's CPU: a query plan reaches
-          // JIT steady state on its ~3rd execution (the PairServeProbe
+          // JIT steady state on its ~3rd execution (the round-13
           // 4.4 → 1.8 → 0.25 CPU-s decay), so which sample carries the
           // tier-up cost is position luck — gating on the best observed
           // CPU compares steady state against the steady-state floor

@@ -3,9 +3,8 @@ import org.apache.spark.sql.SparkSession
 
 /** Dev utility: dump `explain("formatted")` for a list of registered
   * queries to one file per query — the optimization-round evidence
-  * trail (plans/rNN/<query>_<tag>.txt). Unlike PlanProbe (stdout,
-  * fixed list), this writes files and takes the query list and tag on
-  * the command line.
+  * trail (plans/rNN/<query>_<tag>.txt). The query list and tag come
+  * from the command line.
   *
   * sbt "runMain graft.PlanDump before plans/r19 q_graph_pagerank,q_graph_ppr [sfDir]"
   * sbt "runMain graft.PlanDump before plans/r19 all [sfDir]"

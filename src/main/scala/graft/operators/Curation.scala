@@ -659,8 +659,9 @@ object Curation {
     * inferred filter inlined the whole interleave (with its quantizers
     * re-expanded) into a BroadcastNestedLoopJoin condition evaluated
     * per row OUTSIDE whole-stage codegen: 2.4 CPU-s of the query's
-    * 2.5 at sf0.1 (ZOrderProbe). A left join infers nothing on the
-    * probe side and the plan stays a streamed broadcast-hash join. */
+    * 2.5 at sf0.1 (PLANS.md round 18 §1). A left join infers
+    * nothing on the probe side and the plan stays a streamed
+    * broadcast-hash join. */
   private[operators] def blockCumsum(df: DataFrame, blockCol: Column, orderCol: Seq[Column],
                           valCol: Column): DataFrame = {
     val withBlock = df.withColumn("_blk", blockCol)

@@ -488,48 +488,29 @@ object Dedup {
         .map(_.filter(n => (withEmbeddings || !embeddingArtifacts(n)) &&
           (relational || !relationalArtifacts(n))))
         .filter(_.nonEmpty)
-      // Maintenance-window concurrency knob: by default every chain
-      // runs concurrently (minimum build WALL — each chain's tasks
-      // fill the scheduler gaps of the others). A bounded pool trades
-      // wall for CPU: concurrent chains thrash the shared caches, and
-      // the measured curve (IndexBuildProbe + SPARK_GRAFT_BUILD_POOL,
-      // sf0.1) is the operational input for a cluster whose index job
-      // shares its executors with serving traffic.
-      val poolSize = sys.env.get("SPARK_GRAFT_BUILD_POOL")
-        .flatMap(_.toIntOption).map(p => math.max(1, math.min(p, chains.length)))
-        .getOrElse(chains.length)
-      val pool = java.util.concurrent.Executors.newFixedThreadPool(poolSize)
+      // every chain runs concurrently (minimum build WALL — each
+      // chain's tasks fill the scheduler gaps of the others)
+      val pool = java.util.concurrent.Executors.newFixedThreadPool(chains.length)
       try {
         import scala.jdk.CollectionConverters._
         val tasks = chains.map { chain =>
           new java.util.concurrent.Callable[Unit] {
             def call(): Unit = {
-              // pool hint for FAIR-scheduled sessions: the shingle→pair
-              // chain is the build's critical path (every other chain
-              // finishes inside its shadow), so a session running the
-              // FAIR scheduler with a weighted "critical" pool keeps it
-              // from being starved by sibling chains' task bursts; under
-              // the default FIFO scheduler the property is inert
-              spark.sparkContext.setLocalProperty("spark.scheduler.pool",
-                if (chain.headOption.contains("docShingles")) "critical" else "bulk")
-              try {
-                chain.foreach(writeOne)
-                // derived-cap geometry rides each family's chain so the
-                // derivation aggregations overlap the sibling builds
-                // (serialized after the pool they added ~1.5 s of wall);
-                // writeStarCaps below finds the values session-cached
-                if (chain.contains("shingleIndex")) shingleStarCap(spark, dir)
-                if (chain.contains("minhashBands")) bandStarCap(spark, dir)
-                if (chain.contains("simhashTable")) chunkStarCap(spark, dir)
-                if (withEmbeddings && chain.contains("lshBuckets")) {
-                  bucketStarCap(spark, dir)
-                  labelBlockCap(spark, dir)
-                }
-                // (the bucketed by-src layout is written inside the
-                // graphEdgeFracs builder itself since r18 — one pass
-                // produces both edge artifacts)
+              chain.foreach(writeOne)
+              // derived-cap geometry rides each family's chain so the
+              // derivation aggregations overlap the sibling builds
+              // (serialized after the pool they added ~1.5 s of wall);
+              // writeStarCaps below finds the values session-cached
+              if (chain.contains("shingleIndex")) shingleStarCap(spark, dir)
+              if (chain.contains("minhashBands")) bandStarCap(spark, dir)
+              if (chain.contains("simhashTable")) chunkStarCap(spark, dir)
+              if (withEmbeddings && chain.contains("lshBuckets")) {
+                bucketStarCap(spark, dir)
+                labelBlockCap(spark, dir)
               }
-              finally spark.sparkContext.setLocalProperty("spark.scheduler.pool", null)
+              // (the bucketed by-src layout is written inside the
+              // graphEdgeFracs builder itself since r18 — one pass
+              // produces both edge artifacts)
             }
           }
         }
@@ -1663,7 +1644,7 @@ object Dedup {
           })
       }
       starCapsRows.get(memoKey).foreach { case (family, cap) =>
-        capCache.put(s"${sessionKey(spark)}|$family|$dir", Integer.valueOf(cap))
+        capCache.put(s"${sessionKey(spark)}|$family|$dir", java.lang.Long.valueOf(cap))
       }
     }
   }
@@ -1824,16 +1805,34 @@ object Dedup {
     affordable.lastOption.map(_._1).getOrElse(floor)
   }
 
-  /** Session-memoized derived caps per (session, dir, family) — the
-    * derivation is one small aggregation job; every consumer of a
+  /** Session-memoized corpus observations per (session, dir, family):
+    * the derived caps and the document count they budget against —
+    * each derivation is one small aggregation job; every consumer of a
     * family must see the same value or candidate generation and
-    * scoring would disagree within a session. */
+    * scoring would disagree within a session. Double-checked under the
+    * per-key monitors, as in [[memo]]: a cap derivation nests the
+    * document count. */
   private val capCache =
-    graft.sources.SessionSweep.scoped(new java.util.concurrent.ConcurrentHashMap[String, Integer]())
+    graft.sources.SessionSweep.scoped(new java.util.concurrent.ConcurrentHashMap[String, java.lang.Long]())
+  private def derived(spark: SparkSession, dir: String, family: String)(
+      f: => Long): Long = {
+    val k = s"${sessionKey(spark)}|$family|$dir"
+    val hit = capCache.get(k)
+    if (hit != null) hit.longValue
+    else keyLocks.computeIfAbsent(k, _ => new Object).synchronized {
+      val again = capCache.get(k)
+      if (again != null) again.longValue
+      else { val v = f; capCache.put(k, java.lang.Long.valueOf(v)); v }
+    }
+  }
   private def derivedCap(spark: SparkSession, dir: String, family: String)(
-      f: => Int): Int =
-    capCache.computeIfAbsent(s"${sessionKey(spark)}|$family|$dir",
-      _ => Integer.valueOf(f)).intValue()
+      f: => Int): Int = derived(spark, dir, family)(f.toLong).toInt
+
+  /** Document count of the corpus, memoized with the caps: the shingle
+    * and band cap budgets and [[jaccardPairPlan]]'s broadcast switch
+    * all read it, so building the pair plan runs no job of its own. */
+  private[operators] def docCount(spark: SparkSession, dir: String): Long =
+    derived(spark, dir, "docCount")(Tables.documents(spark, dir).count())
 
   /** Broadcast ceiling (documents) for the pair table's size
     * re-attach join: one (long, long) row per doc is ~48 B framed in
@@ -1849,7 +1848,7 @@ object Dedup {
       starCapFor(
         shingleIndex(spark, dir).groupBy("shingle")
           .agg(count(lit(1)).as("df")),
-        Tables.documents(spark, dir).count(), MaxShingleDf)
+        docCount(spark, dir), MaxShingleDf)
     }
 
   /** Derived MinHash band-bucket cap (corpus-level candidate join). */
@@ -1858,7 +1857,7 @@ object Dedup {
       starCapFor(
         minhashBandTable(spark, dir).groupBy("band_idx", "band_hash")
           .agg(count(lit(1)).as("df")),
-        Tables.documents(spark, dir).count(), MaxBandDf)
+        docCount(spark, dir), MaxBandDf)
     }
 
   /** Derived SimHash chunk-bucket cap. */
@@ -2001,7 +2000,7 @@ object Dedup {
       // (sort-merge bounded by the aggregated pair table, which at
       // that scale dwarfs the size join anyway)
       val sizeJoin: DataFrame => DataFrame =
-        if (Tables.documents(spark, dir).count() <= PairSizeBroadcastMaxDocs)
+        if (docCount(spark, dir) <= PairSizeBroadcastMaxDocs)
           broadcast(_) else identity
       smallRows.unionByName(starRows)
         .groupBy("id_a", "id_b")

@@ -139,9 +139,9 @@ object Graph {
     *
     * Flat-artifact GEOMETRY is explicit, not inherited: the scan
     * partition count of this artifact is a measured serving-cost
-    * lever for the superstep loop (GraphServeProbe, sf0.1: 32 small
-    * files → pagerank ~70 task-CPU-s; 9 → ~7; 1 → ~4.5 CPU but the
-    * 10-superstep wall serializes at 7.3 s). Target
+    * lever for the superstep loop (PLANS.md round 18 §8, sf0.1: 32
+    * small files → pagerank ~70 task-CPU-s; 9 → ~7; 1 → ~4.5 CPU but
+    * the 10-superstep wall serializes at 7.3 s). Target
     * [[FlatEdgeRowsPerFile]] rows per file, capped at the session's
     * shuffle parallelism — enough rows per task to amortize fixed
     * per-task cost across the loop's repeated scans, enough files to
@@ -176,23 +176,24 @@ object Graph {
     spark.sql(s"DROP TABLE IF EXISTS $tbl")
     // The bucketed write MUST land one file per bucket — a multi-file
     // bucket breaks the sortBy trust the superstep reader relies on,
-    // and (the r18 lesson, EdgeWriteProbe) the FLAT artifact copied
-    // from these files inherits the file count: under default AQE the
-    // raw plan's repartition(src) write came out as 9 mapper-aligned
-    // local-read tasks each writing ALL 32 buckets — 288 files whose
-    // open/footer overhead tripled every graph query's scan CPU.
+    // and (the r18 lesson, PLANS.md round 18 §7) the FLAT artifact
+    // copied from these files inherits the file count: under default
+    // AQE the raw plan's repartition(src) write came out as 9
+    // mapper-aligned local-read tasks each writing ALL 32 buckets —
+    // 288 files whose open/footer overhead tripled every graph
+    // query's scan CPU.
     // Local shuffle reads are disabled for THIS write only, on a
     // cloned session so the flip cannot race the index job's sibling
     // chains (session conf is global; the clone shares the
     // SparkContext and the external catalog, so the parent sees the
-    // table). Probe-verified: 32 files / one per bucket.
+    // table). Measured: 32 files / one per bucket (same §7).
     val wspark = spark.newSession()
     wspark.conf.set("spark.sql.adaptive.localShuffleReader.enabled", "false")
     val (plan, scratch) = edgeFracsPlan(wspark, dir)
     // NO explicit repartition: the plan's out-weight window already
     // hash-partitions by src into n partitions and sorts by src —
     // exactly the distribution + ordering the bucketed write requires,
-    // so the write rides the window's exchange (EdgeFracsR19Probe:
+    // so the write rides the window's exchange (PLANS.md round 19 §1:
     // same 32 files / one per bucket, one exchange instead of two,
     // steady write CPU 3.1 → 2.9 s and cold 18.1 → 8.3). The require
     // below still guards the one-file-per-bucket property.
@@ -345,8 +346,8 @@ object Graph {
     * needs anyway, so the fraction computation rides a shuffle the
     * plan already pays instead of adding an aggregate + join of its
     * own. Parity-safe: w and ow are exact long sums, frac the same
-    * double division as before. Measured (IndexBuildProbe, sf0.1
-    * steady): graphEdgeFracs 12.7 → see PLANS.md for the r19 number. */
+    * double division as before. Measured (PLANS.md round 19 §1, sf0.1
+    * steady): graphEdgeFracs 12.7 → 8.3 CPU-s. */
   private[operators] def edgeFracsPlan(spark: SparkSession,
       dir: String): (DataFrame, Set[Int]) = {
       val eb = Tables.orders(spark, dir)
@@ -526,7 +527,7 @@ object Graph {
     * rather than a data blow-up. */
   private[operators] val BroadcastMaxNodes = 1000000L
 
-  /** Spec/probe hook: when [[capturePlans]] is set, [[rankLoop]]
+  /** Spec hook: when [[capturePlans]] is set, [[rankLoop]]
     * records the first superstep's planned (not re-executed) physical
     * plan here, so GraphSpec can pin the exchange-free shape of the
     * co-partitioned path — the plan of an intermediate loop stage is

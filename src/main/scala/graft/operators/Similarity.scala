@@ -318,12 +318,12 @@ object Similarity {
     * population stays ~TargetBucketOccupancy as the corpus grows, so
     * a radius-r probe's candidate volume is
     * tables × C(H,≤r) × occupancy — polylog in N, not N/2^H-linear
-    * (the round-13 ServeScaleProbe measured the fixed-H head at
+    * (the round-13 100× probe measured the fixed-H head at
     * 110–124 s vs IVF's 12.7–16 s at 200k vectors precisely because
-    * occupancy grew ∝ N/256). The floor keeps every corpus at or
-    * below 2^(8+5) = 8192 vectors on the legacy 8-plane geometry —
-    * all test SFs (N ≤ 2000) and therefore all static plane-literal
-    * SQL oracles are unchanged. */
+    * occupancy grew ∝ N/256; PLANS.md round 14 §1). The floor keeps
+    * every corpus at or below 2^(8+5) = 8192 vectors on the legacy
+    * 8-plane geometry — all test SFs (N ≤ 2000) and therefore all
+    * static plane-literal SQL oracles are unchanged. */
   private[operators] val MaxPlanes = 24
   private[operators] val TargetBucketOccupancy = 32
 

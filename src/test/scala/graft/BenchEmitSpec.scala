@@ -76,7 +76,7 @@ class BenchEmitSpec extends AnyFunSuite {
       java.util.Locale.setDefault(java.util.Locale.GERMANY)
       val line = sampleLine()
       mapper.readTree(line)
-      assert(!line.matches(""".*\d,\d.*""") || line.contains("\":"))
+      assert(!line.matches(""".*\d,\d.*"""), s"comma decimal separator in $line")
       assert(line.contains("\"host_parallel_penalty\":1.444"))
     } finally java.util.Locale.setDefault(dl)
   }

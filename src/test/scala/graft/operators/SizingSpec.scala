@@ -66,4 +66,40 @@ class SizingSpec extends SparkSpec {
     assert(c1 === c2)
     Dedup.releaseIndexes(spark)
   }
+
+  test("building the pair plan runs no Spark job once the derived caps are memoized") {
+    val dir = docsDir((0 until 10).map(i =>
+      (i.toLong, (1 to 20).map(j => s"p${i}w$j").mkString(" "))))
+    Dedup.shingleStarCap(spark, dir)
+    val sc = spark.sparkContext
+    // job-group ids of every job started, in start order; a sentinel
+    // job run after the build marks the end of the build's events
+    val groups = new java.util.concurrent.LinkedBlockingQueue[String]()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        groups.put(Option(e.properties).flatMap(p => Option(p.getProperty("spark.jobGroup.id")))
+          .getOrElse(""))
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup("pair-plan", "build jaccardPairPlan")
+      Dedup.jaccardPairPlan(spark, dir)
+      sc.setJobGroup("pair-plan-sentinel", "end of build")
+      spark.range(1).count()
+      sc.clearJobGroup()
+      def next() = groups.poll(60, java.util.concurrent.TimeUnit.SECONDS)
+      var built = 0
+      var g = next()
+      while (g != null && g != "pair-plan-sentinel") {
+        if (g == "pair-plan") built += 1
+        g = next()
+      }
+      assert(g != null, "the sentinel job never reached the listener")
+      assert(built === 0, s"jaccardPairPlan started $built job(s) while building its plan")
+    } finally {
+      sc.clearJobGroup()
+      sc.removeSparkListener(listener)
+      Dedup.releaseIndexes(spark)
+    }
+  }
 }

@@ -119,23 +119,35 @@ object Alto {
     * swapped for a fixture lookup in tests — and runs once per URL on
     * the executors (the reference forks a whole Node process per URL
     * instead). Prefer readAltoXmlFiles: a scan beats N point fetches
-    * whenever the store supports it. */
+    * whenever the store supports it.
+    *
+    * The input is hash-partitioned on `urlCol` into
+    * `defaultParallelism` partitions before the fetch, so a work-list
+    * read as one partition (one JDBC query) is fetched, parsed and
+    * sunk by every core. The count is explicit: a column-only
+    * repartition lets AQE coalesce a small work-list back to one
+    * partition. The `fetch_xml` / `alto_pipeline` observe() operators
+    * sit after the exchange: a second action on the result (the second
+    * of two sinks, which reuses the first one's shuffle output) runs
+    * them again and reports full counts. */
   def fetchXml(df: DataFrame,
                fetcher: String => String = HttpFetcher.fetcher(),
                urlCol: String = "url", outCol: String = "xml",
-               policy: FetchPolicy = FetchPolicy.FailFast): DataFrame =
+               policy: FetchPolicy = FetchPolicy.FailFast): DataFrame = {
+    val spread = df.repartition(df.sparkSession.sparkContext.defaultParallelism, col(urlCol))
     policy match {
       case FetchPolicy.FailFast =>
-        df.withColumn(outCol, udf(fetcher).apply(col(urlCol)))
+        spread.withColumn(outCol, udf(fetcher).apply(col(urlCol)))
       case FetchPolicy.NullOnError =>
         val safe = (u: String) =>
           try Option(fetcher(u))
           catch { case scala.util.control.NonFatal(_) => None }
-        df.withColumn(outCol, udf(safe).apply(col(urlCol)))
+        spread.withColumn(outCol, udf(safe).apply(col(urlCol)))
           .observe("fetch_xml",
             count(lit(1)).as("urls"),
             sum(when(col(outCol).isNull, 1).otherwise(0)).as("failed_fetches"))
     }
+  }
 
   /** Parse an XML string column into the ALTO struct (`from_xml`). */
   def parseXml(xmlCol: Column): Column =

@@ -1,6 +1,7 @@
 package graft.sinks
 
-import java.sql.{Connection, PreparedStatement}
+import java.nio.charset.StandardCharsets
+import java.sql.{Connection, PreparedStatement, SQLException, SQLNonTransientException}
 
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
@@ -22,8 +23,12 @@ import org.apache.spark.sql.{DataFrame, Row}
   * Scale posture: all I/O is executor-side and per-partition batched —
   * one FileSystem/Connection per partition, not per row (the reference
   * opens a Postgres connection per record, `flows/main_flow.py:83-90`).
-  * Partition count controls sink parallelism; coalesce before calling
-  * to bound concurrent connections against the target store.
+  * Partition count controls sink parallelism. Fed from
+  * `Alto.fetchXml`, which spreads its input over `defaultParallelism`
+  * partitions, [[jdbcUpsert]] opens up to that many connections at
+  * once; coalesce before calling to bound concurrent connections
+  * against the target store. Local objects are written with NIO
+  * ([[LocalFiles]]): no `.crc` sidecar and no `chmod` fork per object.
   */
 object Sinks {
 
@@ -31,7 +36,11 @@ object Sinks {
     * (string → UTF-8). `outDir` may be any Hadoop-supported scheme
     * (file://, hdfs://, s3a://) — the reference's S3 put becomes the
     * same call with an s3a path. Overwrites existing keys
-    * (idempotent replay). */
+    * (idempotent replay); a key containing `/` lands in a
+    * subdirectory. On the local filesystem (file:// or a scheme-less
+    * path) each object is one NIO create/truncate write, with no
+    * `.crc` sidecar and no `chmod` fork; other schemes go through
+    * `FileSystem.create`. */
   def writeObjectPerRow(df: DataFrame, keyCol: String, payloadCol: String,
                         outDir: String): Unit = {
     val ki = df.schema.fieldIndex(keyCol)
@@ -42,8 +51,14 @@ object Sinks {
       val fs = base.getFileSystem(conf)
       rows.foreach { r =>
         if (!r.isNullAt(ki) && !r.isNullAt(pi)) {
-          val out = fs.create(new Path(base, r.getString(ki)), true)
-          try out.write(r.getString(pi).getBytes("UTF-8")) finally out.close()
+          val key = new Path(base, r.getString(ki))
+          val bytes = r.getString(pi).getBytes(StandardCharsets.UTF_8)
+          LocalFiles.nioPath(fs, key) match {
+            case Some(local) => LocalFiles.write(local, bytes)
+            case None =>
+              val out = fs.create(key, true)
+              try out.write(bytes) finally out.close()
+          }
         }
       }
     }
@@ -83,45 +98,65 @@ object Sinks {
       "ON CONFLICT (representation_id) DO UPDATE SET schema_transcript_url = EXCLUDED.schema_transcript_url",
     insertCols = Seq("representation_id", "transcript_url"))
 
+  /** Attempts per upsert batch: the first write and two replays. */
+  private[sinks] val UpsertAttempts = 3
+
   /** Batched transactional upsert: per partition, one connection, both
     * statements batched, one commit per `batchSize` rows (vs the
     * reference's connection + commit per record). `connFactory` must be
     * serializable (a driver-config-closing function, not a Connection).
-    * On failure the open transaction rolls back and the task retry
-    * replays the partition — safe because both DMLs are idempotent. */
+    *
+    * On failure the open transaction rolls back. A batch that failed
+    * with anything but a `SQLNonTransientException` (constraint,
+    * syntax, authorization: retrying cannot succeed) is replayed on a
+    * fresh connection, up to [[UpsertAttempts]] attempts in all: the
+    * partitions of one sink write concurrently, and a concurrent
+    * transaction can fail where a serial one would not (a deadlock or
+    * serialization failure; embedded Derby's MERGE even fails with an
+    * internal error and a closed session when two connections run it
+    * at once). Past that the task fails, and a task retry replays the
+    * partition. Replays are safe because both DMLs are idempotent. */
   def jdbcUpsert(df: DataFrame, spec: UpsertSpec,
                  connFactory: () => Connection): Unit = {
     val schema = df.schema
     val updIdx = spec.updateCols.map(schema.fieldIndex)
     val insIdx = spec.insertCols.map(schema.fieldIndex)
     df.foreachPartition { rows: Iterator[Row] =>
-      if (rows.nonEmpty) {
+      var open: Option[(Connection, PreparedStatement, PreparedStatement)] = None
+      def connect() = {
         val conn = connFactory()
-        try {
-          conn.setAutoCommit(false)
-          val upd = conn.prepareStatement(spec.updateSql)
-          val ins = conn.prepareStatement(spec.insertSql)
-          var inBatch = 0
-          def flush(): Unit = if (inBatch > 0) {
-            upd.executeBatch(); ins.executeBatch(); conn.commit(); inBatch = 0
-          }
-          rows.foreach { r =>
-            bind(upd, updIdx, r); upd.addBatch()
-            bind(ins, insIdx, r); ins.addBatch()
-            inBatch += 1
-            if (inBatch >= spec.batchSize) flush()
-          }
-          flush()
-        } catch {
-          case e: Throwable =>
-            // rollback on a dead connection throws its own exception —
-            // keep the ORIGINAL failure (the one carrying the failing
-            // row/constraint detail) and attach the rollback's as
-            // suppressed rather than letting it mask the root cause
-            try conn.rollback() catch { case r: Throwable => e.addSuppressed(r) }
-            throw e
-        } finally conn.close()
+        conn.setAutoCommit(false)
+        val w = (conn, conn.prepareStatement(spec.updateSql), conn.prepareStatement(spec.insertSql))
+        open = Some(w)
+        w
       }
+      try rows.grouped(spec.batchSize).foreach { batch =>
+        var attempt = 1
+        var committed = false
+        while (!committed) {
+          val (conn, upd, ins) = open.getOrElse(connect())
+          try {
+            batch.foreach { r =>
+              bind(upd, updIdx, r); upd.addBatch()
+              bind(ins, insIdx, r); ins.addBatch()
+            }
+            upd.executeBatch(); ins.executeBatch(); conn.commit()
+            committed = true
+          } catch {
+            case e: Throwable =>
+              // rollback on a dead connection throws its own exception —
+              // keep the ORIGINAL failure (the one carrying the failing
+              // row/constraint detail) and attach the rollback's as
+              // suppressed rather than letting it mask the root cause
+              try conn.rollback() catch { case r: Throwable => e.addSuppressed(r) }
+              val transient = e.isInstanceOf[SQLException] && !e.isInstanceOf[SQLNonTransientException]
+              if (!transient || attempt >= UpsertAttempts) throw e
+              open = None
+              try conn.close() catch { case scala.util.control.NonFatal(_) => () }
+              attempt += 1
+          }
+        }
+      } finally open.foreach(_._1.close())
     }
   }
 

@@ -27,7 +27,9 @@ import org.apache.spark.sql.functions._
   * `lowerBound` / `upperBound` / `numPartitions` → one query per
   * stride, or `predicates` → one query per predicate), passed through
   * `extraOptions`. `fetchsize` defaults to 1000 so drivers stream
-  * instead of materializing the result.
+  * instead of materializing the result. A one-partition work-list
+  * still fans out downstream: `Alto.fetchXml` hash-partitions it on
+  * the URL over `defaultParallelism` partitions before fetching.
   *
   * The environment has no database, so these are exercised against a
   * recording stub driver (JdbcSourceSpec) the way the sink side is —

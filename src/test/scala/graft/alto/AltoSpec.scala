@@ -3,6 +3,7 @@ package graft.alto
 import graft.SparkSpec
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
+import scala.jdk.CollectionConverters._
 
 /** Golden tests: expected values pinned by running the reference's
   * bundled script (`node script/extract-text-lines-from-alto.js <url>`)
@@ -196,6 +197,51 @@ class AltoSpec extends SparkSpec {
     val m = df.queryExecution.observedMetrics("fetch_xml")
     assert(m.getAs[Long]("urls") == 3L)
     assert(m.getAs[Long]("failed_fetches") == 1L)
+  }
+
+  test("fetchXml spreads a one-partition input; a second sink action still reports full observe() counts") {
+    // fixture-backed fetcher: 5 documents (1 of an unsupported
+    // namespace) plus 2 URLs the archive does not hold
+    val byUrl = AltoModule.fixtureDf(spark).collect()
+      .map(r => r.getString(1) -> r.getString(2)).toMap
+    val urls = (byUrl.keys.toSeq.sorted ++ Seq("https://x.test/gone/1.xml", "https://x.test/gone/2.xml"))
+      .zipWithIndex.map { case (u, i) => (i.toLong + 1, u) }
+      .toDF("representation_id", "url").coalesce(1)
+    assert(urls.rdd.getNumPartitions == 1)
+    val fetched = Alto.fetchXml(urls, byUrl.apply, policy = Alto.FetchPolicy.NullOnError)
+    assert(fetched.rdd.getNumPartitions == spark.sparkContext.defaultParallelism)
+
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[Map[String, Row]]()
+    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
+      def onSuccess(funcName: String, qe: org.apache.spark.sql.execution.QueryExecution,
+                    durationNs: Long): Unit =
+        if (funcName == "foreachPartition") {
+          val m = qe.observedMetrics
+          if (m.contains("fetch_xml")) seen.add(m)
+        }
+      def onFailure(funcName: String, qe: org.apache.spark.sql.execution.QueryExecution,
+                    exception: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    try {
+      // the two sinks of the reference flow: two actions on one Dataset
+      val docs = Alto.pipeline(fetched)
+      docs.foreachPartition((rows: Iterator[Row]) => rows.foreach(_ => ()))
+      docs.foreachPartition((rows: Iterator[Row]) => rows.foreach(_ => ()))
+      import org.scalatest.concurrent.Eventually._
+      import org.scalatest.time.SpanSugar._
+      // listener calls arrive on the listener bus, after the action returns
+      eventually(timeout(30.seconds)) { assert(seen.size == 2) }
+    } finally spark.listenerManager.unregister(listener)
+    // both actions share one QueryExecution, and the first one's event
+    // can be delivered after the second action reset its metrics: a
+    // listener that keeps the latest counts reads the second event's
+    val m = seen.asScala.last
+    assert(m("fetch_xml").getAs[Long]("urls") == 7L)
+    assert(m("fetch_xml").getAs[Long]("failed_fetches") == 2L)
+    assert(m("alto_pipeline").getAs[Long]("docs") == 7L)
+    // the unsupported namespace plus the two failed fetches' null documents
+    assert(m("alto_pipeline").getAs[Long]("skipped_unsupported_docs") == 3L)
   }
 
   test("XML datasource ingest path matches from_xml path") {

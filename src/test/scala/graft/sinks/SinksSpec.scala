@@ -4,6 +4,7 @@ import java.lang.reflect.{InvocationHandler, Method, Proxy}
 import java.sql.{Connection, PreparedStatement}
 
 import scala.collection.mutable
+import scala.jdk.CollectionConverters._
 
 import graft.SparkSpec
 
@@ -43,13 +44,26 @@ object JdbcRecorder {
       }).asInstanceOf[PreparedStatement]
   }
 
-  def connection(runId: String): Connection = connectionImpl(runId, failInserts = false)
+  def connection(runId: String): Connection = connectionImpl(runId, None)
 
   /** A connection whose INSERT statement fails at executeBatch —
     * exercises the rollback path. */
-  def failingConnection(runId: String): Connection = connectionImpl(runId, failInserts = true)
+  def failingConnection(runId: String): Connection =
+    connectionImpl(runId, Some(() => new java.sql.SQLException("constraint violation")))
 
-  private def connectionImpl(runId: String, failInserts: Boolean): Connection =
+  private val insertFailuresLeft =
+    new java.util.concurrent.ConcurrentHashMap[String, java.util.concurrent.atomic.AtomicInteger]()
+
+  /** The first `failures` connections opened under `runId` fail their
+    * INSERT batch with `error`; later ones record normally. */
+  def failingFirst(runId: String, failures: Int, error: () => java.sql.SQLException): Connection = {
+    val left = insertFailuresLeft.computeIfAbsent(runId,
+      _ => new java.util.concurrent.atomic.AtomicInteger(failures))
+    connectionImpl(runId, if (left.getAndDecrement() > 0) Some(error) else None)
+  }
+
+  private def connectionImpl(runId: String,
+                             failInserts: Option[() => java.sql.SQLException]): Connection =
     Proxy.newProxyInstance(getClass.getClassLoader, Array(classOf[Connection]),
       new InvocationHandler {
         def invoke(proxy: AnyRef, m: Method, args: Array[AnyRef]): AnyRef =
@@ -57,8 +71,8 @@ object JdbcRecorder {
             case "setAutoCommit" => add(runId, s"setAutoCommit:${args(0)}"); null
             case "prepareStatement" =>
               val sql = args(0).asInstanceOf[String]
-              if (failInserts && sql.startsWith("INSERT")) failingStatement()
-              else statementProxy(runId, sql)
+              failInserts.filter(_ => sql.startsWith("INSERT"))
+                .fold(statementProxy(runId, sql))(failingStatement)
             case "commit" => add(runId, "commit"); null
             case "rollback" => add(runId, "rollback"); null
             case "close" => add(runId, "close"); null
@@ -69,13 +83,13 @@ object JdbcRecorder {
           }
       }).asInstanceOf[Connection]
 
-  private def failingStatement(): PreparedStatement =
+  private def failingStatement(error: () => java.sql.SQLException): PreparedStatement =
     Proxy.newProxyInstance(getClass.getClassLoader,
       Array(classOf[PreparedStatement]),
       new InvocationHandler {
         def invoke(proxy: AnyRef, m: Method, args: Array[AnyRef]): AnyRef =
           m.getName match {
-            case "executeBatch" => throw new java.sql.SQLException("constraint violation")
+            case "executeBatch" => throw error()
             case _ => null
           }
       }).asInstanceOf[PreparedStatement]
@@ -84,21 +98,43 @@ object JdbcRecorder {
 class SinksSpec extends SparkSpec {
   import spark.implicits._
 
+  /** Every file under `dir`, dotfiles included, as relative path → content. */
+  private def listing(dir: java.nio.file.Path): Map[String, String] = {
+    val walk = java.nio.file.Files.walk(dir)
+    try walk.iterator().asScala.filter(java.nio.file.Files.isRegularFile(_))
+      .map(f => dir.relativize(f).toString -> new String(java.nio.file.Files.readAllBytes(f), "UTF-8"))
+      .toMap
+    finally walk.close()
+  }
+
   test("writeObjectPerRow: one named object per row, content intact, null rows skipped") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-objs").toString
+    val dir = java.nio.file.Files.createTempDirectory("graft-objs")
     val df = Seq(
       ("a.json", """{"v":1}"""),
       ("b.json", """{"v":2}"""),
+      ("sub/c.json", """{"v":3}"""),
       (null.asInstanceOf[String], "dropped")
     ).toDF("s3_key", "payload")
-    Sinks.writeObjectPerRow(df, "s3_key", "payload", dir)
-    val files = new java.io.File(dir).listFiles().filterNot(_.getName.startsWith("."))
-      .map(f => f.getName -> new String(
-        java.nio.file.Files.readAllBytes(f.toPath), "UTF-8")).toMap
-    assert(files == Map("a.json" -> """{"v":1}""", "b.json" -> """{"v":2}"""))
+    val expected = Map("a.json" -> """{"v":1}""", "b.json" -> """{"v":2}""",
+      "sub/c.json" -> """{"v":3}""")
+    Sinks.writeObjectPerRow(df, "s3_key", "payload", dir.toString)
+    assert(listing(dir) == expected)
     // idempotent replay: same keys overwritten, not duplicated
-    Sinks.writeObjectPerRow(df, "s3_key", "payload", dir)
-    assert(new java.io.File(dir).listFiles().count(!_.getName.startsWith(".")) == 2)
+    Sinks.writeObjectPerRow(df, "s3_key", "payload", dir.toString)
+    assert(listing(dir) == expected)
+  }
+
+  test("writeObjectPerRow over a checksummed Hadoop write: the new bytes read back through Hadoop") {
+    val dir = java.nio.file.Files.createTempDirectory("graft-objs-crc")
+    val fs = org.apache.hadoop.fs.FileSystem.getLocal(new org.apache.hadoop.conf.Configuration())
+    val out = fs.create(new org.apache.hadoop.fs.Path(dir.toString, "a.json"), true)
+    try out.write("""{"old":true}""".getBytes("UTF-8")) finally out.close()
+    assert(listing(dir).keySet == Set("a.json", ".a.json.crc"))
+    Sinks.writeObjectPerRow(Seq(("a.json", """{"v":1}""")).toDF("s3_key", "payload"),
+      "s3_key", "payload", dir.toString)
+    assert(listing(dir) == Map("a.json" -> """{"v":1}"""))
+    val in = fs.open(new org.apache.hadoop.fs.Path(dir.toString, "a.json"))
+    try assert(new String(in.readAllBytes(), "UTF-8") == """{"v":1}""") finally in.close()
   }
 
   test("writePartitioned lays out hive-style partition directories") {
@@ -154,6 +190,30 @@ class SinksSpec extends SparkSpec {
     assert(calls.contains("rollback"))
     assert(!calls.contains("commit"))
     assert(calls.last == "close")
+  }
+
+  test("jdbcUpsert replays a failed batch on a fresh connection, but not a non-transient failure") {
+    val df = Seq((1L, "t one", "u/1.json"), (2L, "t two", "u/2.json"))
+      .toDF("representation_id", "transcript", "transcript_url")
+      .coalesce(1)
+    // a failure with no transient/non-transient class (what embedded
+    // Derby raises when two connections run one MERGE at once)
+    Sinks.jdbcUpsert(df, Sinks.transcriptUpsertSpec, () =>
+      JdbcRecorder.failingFirst("replay-test", 1, () => new java.sql.BatchUpdateException()))
+    val calls = JdbcRecorder.calls("replay-test")
+    assert(calls.count(_.startsWith("setAutoCommit")) == 2)  // the first connection, then a fresh one
+    assert(calls.count(_ == "rollback") == 1 && calls.count(_ == "commit") == 1)
+    assert(calls.count(_.startsWith("addBatch:INSERT")) == 2)  // the replay's rows only
+    assert(calls.count(_ == "close") == 2)
+
+    intercept[org.apache.spark.SparkException] {
+      Sinks.jdbcUpsert(df, Sinks.transcriptUpsertSpec, () =>
+        JdbcRecorder.failingFirst("non-transient-test", Sinks.UpsertAttempts,
+          () => new java.sql.SQLIntegrityConstraintViolationException("duplicate key")))
+    }
+    val failed = JdbcRecorder.calls("non-transient-test")
+    assert(failed.count(_.startsWith("setAutoCommit")) == 1, "a non-transient failure is not replayed")
+    assert(failed.count(_ == "rollback") == 1 && !failed.contains("commit"))
   }
 
   test("jdbcUpsert: batched UPDATE+INSERT per partition, transactional, idempotent SQL") {

@@ -39,8 +39,18 @@ class WatermarkStoreSpec extends SparkSpec {
     WatermarkStore.write(path, "2024-02-01")
     assert(WatermarkStore.read(path).contains("2024-02-01"))
     val dir = new java.io.File(path).getParentFile
-    assert(dir.listFiles().map(_.getName).filter(_.endsWith(".tmp")).isEmpty,
-      "temp file must be renamed away, not left behind")
+    assert(dir.listFiles().map(_.getName).toSet == Set("last_run"),
+      "temp file must be renamed away, not left behind, and no .crc sidecar written")
+  }
+
+  test("a mark left by a checksummed Hadoop write is replaced and reads back") {
+    val path = tmpMark()
+    val fs = org.apache.hadoop.fs.FileSystem.getLocal(new org.apache.hadoop.conf.Configuration())
+    val out = fs.create(new org.apache.hadoop.fs.Path(path), true)
+    try out.write("2024-01-15".getBytes("UTF-8")) finally out.close()
+    WatermarkStore.write(path, "2024-02-01")
+    assert(WatermarkStore.read(path).contains("2024-02-01"))
+    assert(new java.io.File(path).getParentFile.listFiles().map(_.getName).toSet == Set("last_run"))
   }
 
   test("drives the incremental catalog work-list end to end") {

@@ -10,13 +10,18 @@ import graft.functions.GraftFunctions.parseIntJs
   * expressions.
   *
   * Architecture notes (100 TB posture):
-  *  - The whole document transform is *per-row* higher-order-function
-  *    work (`transform`/`flatten`/`filter`): no explode, no shuffle, no
-  *    state. A corpus of N XML docs maps over partitions untouched.
+  *  - The whole document transform is *per-row* work: no explode, no
+  *    shuffle, no state. A corpus of N XML docs maps over partitions
+  *    untouched.
   *  - The reference forks one Node process + one HTTP fetch + one DOM
-  *    parse per document (`flows/main_flow.py:54-58`); here parsing is
-  *    Spark's built-in XML reader (StAX, streaming) or `from_xml` over
-  *    a string column.
+  *    parse per document (`flows/main_flow.py:54-58`); here each
+  *    document string is read once by the native
+  *    [[graft.functions.AltoSimplify]] kernel: one StAX cursor pass
+  *    that emits the simplified struct directly, with no intermediate
+  *    generic ALTO struct and no higher-order flatten. AltoSimplifySpec
+  *    checks it byte for byte against `from_xml` + the
+  *    `transform`/`filter` flatten, kept in the test tree as
+  *    `AltoReference`.
   *  - Tolerance: the reference v2 path CRASHES (TypeError) on a
   *    TextBlock without TextLine or a Page without PrintSpace —
   *    verified empirically against the bundled script. In a distributed
@@ -38,23 +43,13 @@ object Alto {
     "ignoreSurroundingSpaces" -> "false",
     "mode" -> "PERMISSIVE")
 
-  /** Distributed XML ingest (S2/S3): one row per `<alto>` document.
-    * Strictly better than the reference's per-URL fetch+DOM: StAX
-    * streaming parse, partitioned by file splits. */
-  def readAltoXmlFiles(spark: SparkSession, path: String): DataFrame =
-    spark.read.format("xml")
-      .options(xmlOptions + ("rowTag" -> "alto"))
-      .schema(AltoSchema.alto)
-      .load(path)
-      .withColumn("alto", struct(col("_xmlns"), col("Description"), col("Layout")))
-      .select("alto")
-
-  /** Narrow-schema bulk ingest (r20, guide §6): identical scan shape to
-    * [[readAltoXmlFiles]], but the schema handed to the StAX parser is
-    * [[AltoSchema.altoBulk]] — only the fields the bulk token-accounting
-    * query reads. The parser skips converting the other three token
-    * attributes and the OCRProcessing subtree entirely (ReadSchema
-    * narrowing for a custom source). */
+  /** Narrow-schema bulk ingest (r20, guide §6): one row per `<alto>`
+    * document of the files at `path`, through the StAX `xml` datasource
+    * (partitioned by file splits), with [[AltoSchema.altoBulk]] as the
+    * schema — only the fields the bulk token-accounting query reads.
+    * The parser skips converting the other three token attributes and
+    * the OCRProcessing subtree entirely (ReadSchema narrowing for a
+    * custom source). */
   def readAltoXmlFilesBulk(spark: SparkSession, path: String): DataFrame =
     spark.read.format("xml")
       .options(xmlOptions + ("rowTag" -> "alto"))
@@ -63,12 +58,13 @@ object Alto {
       .withColumn("alto", struct(col("_xmlns"), col("Description"), col("Layout")))
       .select("alto")
 
-  /** Bulk twin of [[simplify]] over the narrow schema: the same
-    * 6-level flatten, v2 truthy-CONTENT filter, and namespace dispatch,
+  /** The simplified document over the narrow bulk schema: the 6-level
+    * flatten, v2 truthy-CONTENT filter, and namespace dispatch of
+    * [[graft.functions.AltoSimplify]],
     * with tokens carrying only (text, x) and the description reduced to
     * (fileName, width) — exactly the fields q_alto_bulk consumes. Field
     * semantics (head-of-array chains, JS parseInt, v3's undefined
-    * fileName) mirror the full path, expression for expression. */
+    * fileName) as in the full path. */
   def simplifyBulk(alto: Column): Column = {
     val toks = flatten(transform(ca(alto("Layout")), l =>
       flatten(transform(ca(l("Page")), p =>
@@ -104,8 +100,8 @@ object Alto {
       * fails the Spark task — after task retries, the job. This is the
       * default. */
     case object FailFast extends FetchPolicy
-    /** The pipeline's poison-doc stance (same policy simplify() takes
-      * for unsupported namespaces): a throwing fetcher yields a null
+    /** The pipeline's poison-doc stance (the same policy the pipeline
+      * takes for unsupported namespaces): a throwing fetcher yields a null
       * xml for that row, and the `fetch_xml` observe() metric reports
       * (urls, failed_fetches) after any action. */
     case object NullOnError extends FetchPolicy
@@ -118,8 +114,8 @@ object Alto {
     * client ([[HttpFetcher]]: timeouts, bounded retry with backoff),
     * swapped for a fixture lookup in tests — and runs once per URL on
     * the executors (the reference forks a whole Node process per URL
-    * instead). Prefer readAltoXmlFiles: a scan beats N point fetches
-    * whenever the store supports it.
+    * instead). Prefer an `xml` datasource scan whenever the store
+    * supports it: a scan beats N point fetches.
     *
     * The input is hash-partitioned on `urlCol` into
     * `defaultParallelism` partitions before the fetch, so a work-list
@@ -149,86 +145,8 @@ object Alto {
     }
   }
 
-  /** Parse an XML string column into the ALTO struct (`from_xml`). */
-  def parseXml(xmlCol: Column): Column =
-    from_xml(xmlCol, AltoSchema.alto,
-      scala.jdk.CollectionConverters.MapHasAsJava(xmlOptions).asJava)
-
   private def ca(c: Column): Column = coalesce(c, array())
   private def head(c: Column): Column = element_at(c, 1)
-
-  /** One `<String>` token → {text, x, y, width, height} with JS
-    * parseInt semantics (`:23971-23977`). */
-  private def token(s: Column): Column = struct(
-    s("_CONTENT").as("text"),
-    parseIntJs(s("_HPOS")).as("x"),
-    parseIntJs(s("_VPOS")).as("y"),
-    parseIntJs(s("_WIDTH")).as("width"),
-    parseIntJs(s("_HEIGHT")).as("height"))
-
-  /** The 6-level Layout→Page→PrintSpace→TextBlock→TextLine→String
-    * flatten (G1, `:23962-23983` v2 / `:24006-24024` v3), in document
-    * order, as a single per-row expression. */
-  private def flatTokens(alto: Column): Column =
-    flatten(transform(ca(alto("Layout")), l =>
-      flatten(transform(ca(l("Page")), p =>
-        flatten(transform(ca(p("PrintSpace")), ps =>
-          flatten(transform(ca(ps("TextBlock")), tb =>
-            flatten(transform(ca(tb("TextLine")), tl =>
-              transform(ca(tl("String")), s => token(s))))))))))))
-
-  /** v2 keeps only truthy CONTENT (`if (!altoString.$.CONTENT) return
-    * null` + compact, `:23968-23970`); "" and missing are both falsy. */
-  private def v2Tokens(alto: Column): Column =
-    filter(flatTokens(alto), t => t("text").isNotNull && t("text") =!= "")
-
-  /** v3 keeps every token, empty CONTENT included (`:24011-24018`). */
-  private def v3Tokens(alto: Column): Column = flatTokens(alto)
-
-  /** description.* scalars via null-safe head-of-array chains — the
-    * Spark analog of the `?.[0]?.` optional chaining (`:23986-23998`). */
-  private def descriptionStruct(alto: Column, fileNameSupported: Boolean): Column = {
-    val step = head(head(head(alto("Description"))("OCRProcessing"))("ocrProcessingStep"))
-    val sw = head(step("processingSoftware"))
-    val page0 = head(head(alto("Layout"))("Page"))
-    val fileName =
-      if (fileNameSupported)
-        head(head(head(alto("Description"))("sourceImageInformation"))("fileName"))
-      else lit(null).cast("string") // v3 hardcodes undefined (`:24027`)
-    struct(
-      fileName.as("fileName"),
-      head(step("processingDateTime")).as("processingDateTime"),
-      head(step("processingStepSettings")).as("processingStepSettings"),
-      head(sw("softwareCreator")).as("softwareCreator"),
-      head(sw("softwareName")).as("softwareName"),
-      head(sw("softwareVersion")).as("softwareVersion"),
-      page0("_WIDTH").as("width"),   // kept as STRING, never parsed (`:23997`)
-      page0("_HEIGHT").as("height"))
-  }
-
-  private def nullDescription: Column = {
-    val n = lit(null).cast("string")
-    struct(n.as("fileName"), n.as("processingDateTime"),
-      n.as("processingStepSettings"), n.as("softwareCreator"),
-      n.as("softwareName"), n.as("softwareVersion"),
-      n.as("width"), n.as("height"))
-  }
-
-  /** Namespace dispatch (F7, `:23957-24058`) → simplified document
-    * struct. Unsupported versions yield the all-null record, not an
-    * error (`:24044-24058`). */
-  def simplify(alto: Column): Column = {
-    val ns = alto("_xmlns")
-    when(ns === NsV2,
-      struct(descriptionStruct(alto, fileNameSupported = true).as("description"),
-             v2Tokens(alto).as("text")))
-    .when(ns === NsV3,
-      struct(descriptionStruct(alto, fileNameSupported = false).as("description"),
-             v3Tokens(alto).as("text")))
-    .otherwise(
-      struct(nullDescription.as("description"),
-             lit(null).cast(org.apache.spark.sql.types.ArrayType(AltoSchema.textLineOut)).as("text")))
-  }
 
   /** Transcript = space-join of token texts in document order
     * (A1/F2, `flows/main_flow.py:70`). `array_join` skips null texts
@@ -242,15 +160,6 @@ object Alto {
     * keys. */
   def toSimplifiedJson(simplified: Column): Column =
     to_json(simplified, Map("ignoreNullFields" -> "true"))
-
-  /** Byte-parity form of F5: the reference emits
-    * `JSON.stringify(simplifiedAlto, null, 2)`
-    * (`extract-text-lines-from-alto.js:24071`) — 2-space pretty JSON.
-    * json_pretty re-lays the compact form in that exact byte format,
-    * so S5 objects written from this column equal the reference's S3
-    * objects byte-for-byte (AltoSpec pins a golden). */
-  def toSimplifiedJsonPretty(simplified: Column): Column =
-    graft.functions.JsonPrettyColumn(toSimplifiedJson(simplified))
 
   /** Full document pipeline over (id, url, xml) rows: the engine-side
     * equivalent of the reference's per-row task chain
@@ -267,15 +176,19 @@ object Alto {
   def pipeline(df: DataFrame, idCol: String = "representation_id",
                urlCol: String = "url", xmlCol: String = "xml"): DataFrame = {
     import graft.functions.GraftFunctions._
-    val ns = col("alto")("_xmlns")
-    df.withColumn("alto", parseXml(col(xmlCol)))
+    // every v2/v3 document the kernel reads has a (possibly empty) token
+    // array; a null, unparsable or unsupported one has none
+    df.withColumn("simplified", graft.functions.AltoSimplify(col(xmlCol)))
       .observe("alto_pipeline",
         count(lit(1)).as("docs"),
-        sum(when(ns.isNull || (ns =!= NsV2 && ns =!= NsV3), 1).otherwise(0))
+        sum(when(col("simplified")("text").isNull, 1).otherwise(0))
           .as("skipped_unsupported_docs"))
-      .withColumn("simplified", simplify(col("alto")))
       .withColumn("json", toSimplifiedJson(col("simplified")))
-      .withColumn("json_pretty", toSimplifiedJsonPretty(col("simplified")))
+      // byte-parity form of F5: the reference emits
+      // JSON.stringify(simplifiedAlto, null, 2) (`:24071`); json_pretty
+      // re-lays the compact form in that exact byte format, so objects
+      // written from this column equal the reference's (AltoSpec golden)
+      .withColumn("json_pretty", graft.functions.JsonPrettyColumn(col("json")))
       .withColumn("transcript", transcript(col("simplified")))
       .withColumn("s3_key", s3Key(col(urlCol)))
       .select(col(idCol), col(urlCol), col("simplified"),

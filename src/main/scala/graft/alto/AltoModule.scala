@@ -50,7 +50,7 @@ object AltoModule extends QueryModule {
 
   private def tokensQuery(spark: SparkSession, dir: String): DataFrame = {
     val df = fixtureDf(spark)
-      .withColumn("simplified", Alto.simplify(Alto.parseXml(col("xml"))))
+      .withColumn("simplified", graft.functions.AltoSimplify(col("xml")))
     Alto.tokens(df, "representation_id")
       .orderBy("representation_id", "pos")
   }
@@ -144,7 +144,7 @@ object AltoModule extends QueryModule {
     // parser converts only the fields this query reads (namespace,
     // fileName, page width, token CONTENT + HPOS), skipping the other
     // three token attributes and the OCRProcessing subtree; simplifyBulk
-    // mirrors the full simplify()'s dispatch/filter semantics over the
+    // mirrors the AltoSimplify kernel's dispatch/filter semantics over the
     // narrow struct. Same rows at all SFs (oracle is the generator's
     // closed form, swept).
     val raw = Alto.readAltoXmlFilesBulk(spark, bulkDir())

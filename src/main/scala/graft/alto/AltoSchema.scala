@@ -2,15 +2,15 @@ package graft.alto
 
 import org.apache.spark.sql.types._
 
-/** Schema for ALTO v2/v3 XML as parsed by Spark's built-in XML support
-  * (`from_xml` / the `xml` datasource, `attributePrefix` = "_").
+/** Schemas of the ALTO path: the narrow bulk-scan schema handed to
+  * Spark's `xml` datasource (`attributePrefix` = "_"), and the
+  * simplified document every ALTO path produces.
   *
-  * Mirrors xml2js 0.2 defaults the reference relies on
-  * (`script/extract-text-lines-from-alto.js:19010-19049`):
+  * The XML schema mirrors the xml2js 0.2 defaults the reference relies
+  * on (`script/extract-text-lines-from-alto.js:19010-19049`):
   * `explicitArray: true` → every repeatable element is `ArrayType`;
   * `attrkey: "$"` → attributes, here with prefix `_`;
   * `charkey: "_"` → element text, here plain `StringType` leaves.
-  *
   * One schema serves both v2 and v3 (same element names; the namespace
   * attribute `_xmlns` dispatches, reference `:23957-23958`).
   */
@@ -22,52 +22,15 @@ object AltoSchema {
 
   private val strArr = arr(StringType)
 
-  val processingSoftware: StructType = st(
-    "softwareCreator" -> strArr,
-    "softwareName" -> strArr,
-    "softwareVersion" -> strArr)
-
-  val ocrProcessingStep: StructType = st(
-    "processingDateTime" -> strArr,
-    "processingStepSettings" -> strArr,
-    "processingSoftware" -> arr(processingSoftware))
-
-  val description: StructType = st(
-    "sourceImageInformation" -> arr(st("fileName" -> strArr)),
-    "OCRProcessing" -> arr(st("ocrProcessingStep" -> arr(ocrProcessingStep))))
-
-  val altoString: StructType = st(
-    "_CONTENT" -> StringType,
-    "_HPOS" -> StringType,
-    "_VPOS" -> StringType,
-    "_WIDTH" -> StringType,
-    "_HEIGHT" -> StringType)
-
-  val textLine: StructType = st("String" -> arr(altoString))
-  val textBlock: StructType = st("TextLine" -> arr(textLine))
-  val printSpace: StructType = st("TextBlock" -> arr(textBlock))
-
-  val page: StructType = st(
-    "_WIDTH" -> StringType,
-    "_HEIGHT" -> StringType,
-    "PrintSpace" -> arr(printSpace))
-
-  val layout: StructType = st("Page" -> arr(page))
-
-  /** Contents of the `<alto>` root — the shape `from_xml` returns. */
-  val alto: StructType = st(
-    "_xmlns" -> StringType,
-    "Description" -> arr(description),
-    "Layout" -> arr(layout))
-
   /** ReadSchema-narrowed variant for the bulk token-accounting scan
     * (q_alto_bulk): the query reads ONLY the namespace dispatch, the
     * source fileName, the page width, and each token's CONTENT + HPOS —
     * so the schema handed to the StAX datasource omits the other three
     * token attributes and the whole OCRProcessing subtree, and the
     * parser never converts them (the custom-source equivalent of a
-    * parquet scan's ReadSchema pruning, guide §6). The FULL [[alto]]
-    * schema stays the contract for the simplify/fixture path. */
+    * parquet scan's ReadSchema pruning, guide §6). The per-document
+    * path does not parse into a schema at all: the AltoSimplify kernel
+    * reads the fields it needs in one pass. */
   val altoBulk: StructType = st(
     "_xmlns" -> StringType,
     "Description" -> arr(st(

@@ -1,7 +1,7 @@
 package graft.functions
 
-import com.fasterxml.jackson.core.{JsonParser, JsonToken}
-import com.fasterxml.jackson.databind.ObjectMapper
+import com.fasterxml.jackson.core.{JsonFactory, JsonParser, JsonToken}
+import com.fasterxml.jackson.core.io.JsonStringEncoder
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -18,9 +18,9 @@ import org.apache.spark.unsafe.types.UTF8String
   *  - `"key": value` (one space after the colon, none before);
   *  - every object entry / array element on its own line;
   *  - empty object/array inline as `{}` / `[]`;
-  *  - string escaping per JSON.stringify (Jackson's scalar
-  *    serialization matches: `"` `\` and control chars escaped,
-  *    non-ASCII left literal);
+  *  - string escaping per JSON.stringify (Jackson's 7-bit escape
+  *    table matches: `"` `\` and control chars escaped, non-ASCII left
+  *    literal);
   *  - key order preserved from the input document (Spark's `to_json`
   *    emits struct-field order, which is the order the reference
   *    builds its object literals in).
@@ -31,11 +31,13 @@ import org.apache.spark.unsafe.types.UTF8String
   * object literals is `undefined` (optional chaining), never `null`.
   */
 object JsonPretty {
-  private val mapper = new ObjectMapper()
+  private val factory = new JsonFactory()
+  private val encoder = JsonStringEncoder.getInstance()
 
   /** Token-streaming re-layout: structure and whitespace are rewritten
     * to the JSON.stringify(,null,2) format; STRING scalars are
-    * re-escaped (Jackson's escaping matches JSON.stringify's);
+    * re-escaped straight into the output (Jackson's string encoder,
+    * the escape table its serializer uses, matches JSON.stringify's);
     * NUMERIC tokens pass through byte-verbatim from the compact input
     * — json_pretty never re-formats a number, so it cannot introduce
     * a divergence (a Jackson re-serialization would turn 1e+21 into
@@ -47,7 +49,7 @@ object JsonPretty {
   def compute(s: UTF8String): UTF8String = {
     if (s == null) return null
     val sb = new java.lang.StringBuilder(s.numBytes * 2)
-    val p = mapper.getFactory.createParser(s.toString)
+    val p = factory.createParser(s.toString)
     // malformed input → NULL, like every sibling kernel (MediaHeaders,
     // JsParseInt): one corrupt row must not kill the whole sink write.
     // (JS JSON.parse would throw too, but a row-level NULL is the SQL
@@ -64,6 +66,13 @@ object JsonPretty {
     var i = 0; while (i < d * 2) { sb.append(' '); i += 1 }
   }
 
+  /** A JSON string literal: the quoted, escaped form of `s`. */
+  private[functions] def quote(s: String, sb: java.lang.StringBuilder): Unit = {
+    sb.append('"')
+    encoder.quoteAsString(s, sb)
+    sb.append('"')
+  }
+
   private def render(p: JsonParser, t: JsonToken, depth: Int,
                      sb: java.lang.StringBuilder): Unit = t match {
     case JsonToken.START_OBJECT =>
@@ -75,7 +84,8 @@ object JsonPretty {
         if (!first) sb.append(",\n")
         first = false
         indent(sb, depth + 1)
-        sb.append(mapper.writeValueAsString(p.currentName)).append(": ")
+        quote(p.currentName, sb)
+        sb.append(": ")
         render(p, p.nextToken(), depth + 1, sb)
         tok = p.nextToken()
       }
@@ -93,8 +103,7 @@ object JsonPretty {
         tok = p.nextToken()
       }
       sb.append('\n'); indent(sb, depth); sb.append(']')
-    case JsonToken.VALUE_STRING =>
-      sb.append(mapper.writeValueAsString(p.getText))
+    case JsonToken.VALUE_STRING => quote(p.getText, sb)
     case JsonToken.VALUE_NUMBER_INT | JsonToken.VALUE_NUMBER_FLOAT =>
       sb.append(p.getText) // original token, verbatim
     case JsonToken.VALUE_TRUE => sb.append("true")

@@ -47,9 +47,11 @@ object JsParseInt {
     if (d >= 0 && d < radix) d else -1
   }
 
-  def parse(s: UTF8String): java.lang.Integer = {
-    if (s == null) return null
-    val str = s.toString
+  def parse(s: UTF8String): java.lang.Integer =
+    if (s == null) null else parse(s.toString)
+
+  def parse(str: String): java.lang.Integer = {
+    if (str == null) return null
     val n = str.length
     var i = 0
     while (i < n && jsWhitespace(str.charAt(i))) i += 1

@@ -1,6 +1,7 @@
 package graft.alto
 
 import graft.SparkSpec
+import graft.functions.AltoSimplify
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 import scala.jdk.CollectionConverters._
@@ -12,7 +13,8 @@ import scala.jdk.CollectionConverters._
   * TextBlock without TextLine / Page without PrintSpace; our engine
   * yields zero rows for those levels (documented in Alto.scala).
   */
-class AltoSpec extends SparkSpec {
+class AltoSpec extends SparkSpec
+    with org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper {
   import spark.implicits._
 
   private def load(fixture: String): DataFrame = {
@@ -24,7 +26,7 @@ class AltoSpec extends SparkSpec {
 
   private def simplified(fixture: String): Row =
     load(fixture)
-      .select(Alto.simplify(Alto.parseXml($"xml")).as("s"))
+      .select(AltoSimplify($"xml").as("s"))
       .select("s.*").collect().head
 
   test("v2 basic: description metadata, string width/height, parseInt truncation") {
@@ -84,7 +86,7 @@ class AltoSpec extends SparkSpec {
 
   test("transcript: space-join in document order; json drops null fields") {
     val df = load("alto_v2_multilayout.xml")
-      .withColumn("s", Alto.simplify(Alto.parseXml($"xml")))
+      .withColumn("s", AltoSimplify($"xml"))
     val row = df.select(
       Alto.transcript($"s").as("t"),
       Alto.toSimplifiedJson($"s").as("j")).collect().head
@@ -245,15 +247,15 @@ class AltoSpec extends SparkSpec {
   }
 
   test("XML datasource ingest path matches from_xml path") {
-    val viaDs = Alto.readAltoXmlFiles(spark, resource("/alto/alto_v2_basic.xml"))
-      .select(Alto.simplify($"alto").as("s"))
+    val viaDs = AltoReference.readAltoXmlFiles(spark, resource("/alto/alto_v2_basic.xml"))
+      .select(AltoReference.simplify($"alto").as("s"))
       .select(Alto.transcript($"s")).collect().head.getString(0)
     assert(viaDs == "Hello world")
   }
 
   test("outer token view keeps empty documents as an all-null row") {
     val df = AltoModule.fixtureDf(spark)
-      .withColumn("simplified", Alto.simplify(Alto.parseXml($"xml")))
+      .withColumn("simplified", AltoSimplify($"xml"))
     val inner = Alto.tokens(df, "representation_id")
       .select("representation_id").distinct().as[Long].collect().toSet
     val outer = Alto.tokensOuter(df, "representation_id")
@@ -268,10 +270,26 @@ class AltoSpec extends SparkSpec {
 
   test("exploded token view: one row per kept token with positions") {
     val df = load("alto_v2_multilayout.xml")
-      .withColumn("simplified", Alto.simplify(Alto.parseXml($"xml")))
+      .withColumn("simplified", AltoSimplify($"xml"))
     val toks = Alto.tokens(df, "representation_id")
     assert(toks.count() == 3)
     assert(toks.orderBy("pos").select("text").as[String].collect().toSeq ==
       Seq("keep", "second", "third"))
+  }
+
+  test("pipeline plan: the kernel runs once per row, with no from_xml and no higher-order flatten") {
+    // a fetched (non-local) input, so the projections run in the
+    // executed plan rather than being folded into a local relation
+    val byUrl = AltoModule.fixtureDf(spark).collect()
+      .map(r => r.getString(1) -> r.getString(2)).toMap
+    val urls = byUrl.keys.toSeq.sorted.zipWithIndex.map { case (u, i) => (i.toLong + 1, u) }
+      .toDF("representation_id", "url")
+    val out = Alto.pipeline(Alto.fetchXml(urls, byUrl.apply))
+    assert(out.collect().length == 5)
+    val exprs = collect(out.queryExecution.executedPlan) { case p => p }
+      .flatMap(_.expressions.flatMap(_.collect { case e => e }))
+    assert(exprs.count(_.isInstanceOf[AltoSimplify]) == 1)
+    val banned = Set("XmlToStructs", "ArrayTransform", "ArrayFilter")
+    assert(exprs.map(_.getClass.getSimpleName).filter(banned).isEmpty)
   }
 }

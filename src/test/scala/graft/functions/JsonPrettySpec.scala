@@ -69,4 +69,22 @@ class JsonPrettySpec extends SparkSpec {
     assert(pretty ==
       "{\n  \"a\": {\n    \"b\": [\n      1,\n      {\n        \"c\": \"x\"\n      },\n      []\n    ],\n    \"d\": {}\n  },\n  \"e\": null\n}")
   }
+
+  test("string quoting equals Jackson's serializer for any string (500 seeded strings)") {
+    // the characters JSON escaping treats specially: quote, backslash,
+    // every C0 control, DEL, non-ASCII, surrogate pairs and lone
+    // surrogates, and the JS line terminators U+2028/U+2029
+    val special: Gen[String] = Gen.oneOf(
+      Gen.oneOf("\"", "\\", "/", "\u007f", "\u00e9", "\u4e2d", "\ud83d\ude00", "\ud800",
+        "\udfff", "\u2028", "\u2029", "\ufeff"),
+      Gen.choose(0, 0x1f).map(c => c.toChar.toString),
+      Gen.alphaNumChar.map(_.toString))
+    val strings = Gen.listOf(special).map(_.mkString)
+    (0 until 500).foreach { i =>
+      val s = strings.apply(Gen.Parameters.default, Seed(9000L + i)).get
+      val sb = new java.lang.StringBuilder
+      JsonPretty.quote(s, sb)
+      assert(sb.toString == mapper.writeValueAsString(s), s"seed $i")
+    }
+  }
 }

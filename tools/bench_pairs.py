@@ -7,7 +7,10 @@ from one seed to the next, and prints for every end-to-end metric and
 workload each side's median and quartiles, the pairs the working tree
 won, and the verdict of the paired-runs rule: a gain needs at least
 nine wins in ten pairs and a median gap wider than the parent's
-interquartile range. Usage (from the repository root):
+interquartile range. It also prints each side's median wall time per
+stage of the timed iterations (`diagnostics.timed_parts_s`: `objects`,
+`upsert`, ... for `alto_flow`), so a saving can be placed in a stage
+without a traced run. Usage (from the repository root):
 
     python3 tools/bench_pairs.py --parent HEAD --seeds 31-40 \\
         --workload alto_flow --log pairs.jsonl
@@ -55,6 +58,23 @@ def parse_result(stdout):
             continue
         if isinstance(obj, dict) and "metrics" in obj:
             return obj
+    return None
+
+
+def parse_parts(stdout):
+    """Per-stage wall seconds of a run: the median over its timed
+    iterations of each stage in the diagnostics line's `timed_parts_s`;
+    None if the run printed no diagnostics."""
+    for line in stdout.strip().splitlines():
+        try:
+            obj = json.loads(line)
+        except ValueError:
+            continue
+        if isinstance(obj, dict) and "diagnostics" in obj:
+            runs = obj["diagnostics"].get("timed_parts_s") or []
+            stages = sorted({name for run in runs for name in run})
+            return {name: statistics.median(run[name] for run in runs if name in run)
+                    for name in stages}
     return None
 
 
@@ -123,6 +143,41 @@ def summarise(records, spec):
     return rows
 
 
+def summarise_stages(records):
+    """One row per (workload, stage): each side's median over its
+    correct runs of the run's per-stage wall seconds."""
+    rows = []
+    for w in sorted({r["workload"] for r in records}):
+        per_side = {side: [r["parts"] for r in records
+                           if r["workload"] == w and r["side"] == side and ok(r) and r.get("parts")]
+                    for side in SIDES}
+        stages = sorted({name for side in SIDES for parts in per_side[side] for name in parts})
+        for name in stages:
+            row = {"workload": w, "stage": name}
+            for side in SIDES:
+                xs = [parts[name] for parts in per_side[side] if name in parts]
+                row[side] = statistics.median(xs) if xs else None
+                row[side + "_runs"] = len(xs)
+            rows.append(row)
+    return rows
+
+
+def format_stages(rows):
+    out = ["| workload | stage | parent median s | change median s | change | runs |",
+           "|---|---|---|---|---|---|"]
+    for r in rows:
+        p, c = r["parent"], r["change"]
+        rel = f"{(c - p) / p:+.1%}" if p and c is not None else ""
+        fmt = lambda x: "" if x is None else f"{x:.4g}"
+        out.append(f"| {r['workload']} | {r['stage']} | {fmt(p)} | {fmt(c)} | {rel} "
+                   f"| {r['parent_runs']}/{r['change_runs']} |")
+    return "\n".join(out)
+
+
+def report(records, spec):
+    return format_rows(summarise(records, spec)) + "\n\n" + format_stages(summarise_stages(records))
+
+
 def _quartiles_text(q):
     return " / ".join(f"{x:.4g}" for x in q)
 
@@ -166,7 +221,7 @@ def run_one(checkout, workload, seed, seconds):
     p = subprocess.run([sys.executable, "e2ebench/run.py", "--workload", workload,
                         "--seed", str(seed), "--seconds", str(seconds), "--trace", "0"],
                        cwd=checkout, stdout=subprocess.PIPE, stderr=subprocess.PIPE, text=True)
-    return {"rc": p.returncode, "result": parse_result(p.stdout),
+    return {"rc": p.returncode, "result": parse_result(p.stdout), "parts": parse_parts(p.stdout),
             "stderr_tail": p.stderr[-2000:] if p.returncode else ""}
 
 
@@ -182,7 +237,7 @@ def main(argv):
     args = ap.parse_args(argv)
     spec = load_spec()
     if args.report:
-        print(format_rows(summarise(read_log(args.report), spec)))
+        print(report(read_log(args.report), spec))
         return 0
     if not args.seeds:
         ap.error("--seeds is required unless --report is given")
@@ -205,7 +260,7 @@ def main(argv):
                 if args.log:
                     with open(args.log, "a") as f:
                         f.write(json.dumps(rec) + "\n")
-    print(format_rows(summarise(records, spec)))
+    print(report(records, spec))
     return 0
 
 

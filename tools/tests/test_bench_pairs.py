@@ -16,17 +16,19 @@ SPEC = {"end_to_end": [{"name": "wall_rel", "better": "lower", "bound": 0.25},
                        {"name": "heap_retained_mb", "better": "lower", "bound": 0.25}]}
 
 
-def stdout(wall, heap, correct=True, failed=0):
+def stdout(wall, heap, correct=True, failed=0, parts=None):
     """What e2ebench/run.py prints: a diagnostics line, then the result."""
     result = {"correct": correct, "attempted": 120, "failed": failed,
               "metrics": {"wall_rel": {"value": wall, "unit": "ratio"},
                           "heap_retained_mb": {"value": heap, "unit": "MB"}}}
-    return json.dumps({"diagnostics": {"seed": 1}}) + "\n" + json.dumps(result) + "\n"
+    diag = {"seed": 1, "timed_parts_s": parts or []}
+    return json.dumps({"diagnostics": diag}) + "\n" + json.dumps(result) + "\n"
 
 
 def record(side, seed, wall, heap=100.0, rc=0, **kw):
+    out = stdout(wall, heap, **kw)
     return {"side": side, "workload": "alto_flow", "seed": seed, "rc": rc,
-            "result": bench_pairs.parse_result(stdout(wall, heap, **kw))}
+            "result": bench_pairs.parse_result(out), "parts": bench_pairs.parse_parts(out)}
 
 
 def rows_by_metric(records):
@@ -39,6 +41,13 @@ class ParseTest(unittest.TestCase):
         r = bench_pairs.parse_result(stdout(14.1, 98.6) + "[e2ebench] trailing log\n")
         self.assertEqual(r["metrics"]["wall_rel"]["value"], 14.1)
         self.assertIsNone(bench_pairs.parse_result("no json here\n"))
+
+    def test_stage_walls_are_the_median_over_timed_iterations(self):
+        parts = [{"objects": 1.0, "upsert": 0.5}, {"objects": 3.0, "upsert": 0.4},
+                 {"objects": 2.0, "upsert": 0.6, "fetch": 0.01}]
+        got = bench_pairs.parse_parts(stdout(14.1, 98.6, parts=parts))
+        self.assertEqual(got, {"fetch": 0.01, "objects": 2.0, "upsert": 0.5})
+        self.assertIsNone(bench_pairs.parse_parts("no json here\n"))
 
     def test_seed_ranges_and_lists(self):
         self.assertEqual(bench_pairs.parse_seeds("31-34"), [31, 32, 33, 34])
@@ -91,6 +100,22 @@ class SummariseTest(unittest.TestCase):
         self.assertEqual(row["failed_runs"], {"parent": 0, "change": 2})
         table = bench_pairs.format_rows(bench_pairs.summarise(recs, SPEC))
         self.assertIn("alto_flow change 2", table)
+
+
+class StagesTest(unittest.TestCase):
+
+    def test_each_side_reports_its_median_per_stage_over_correct_runs(self):
+        def parts(objects):
+            return [{"objects": objects, "upsert": 0.5}]
+        recs = [record("parent", 1, 20.0, parts=parts(2.0)), record("change", 1, 10.0, parts=parts(1.0)),
+                record("parent", 2, 20.0, parts=parts(4.0)), record("change", 2, 10.0, parts=parts(3.0)),
+                record("parent", 3, 20.0, parts=parts(3.0)),
+                record("change", 3, 10.0, correct=False, parts=parts(9.0))]
+        rows = {r["stage"]: r for r in bench_pairs.summarise_stages(recs)}
+        self.assertEqual((rows["objects"]["parent"], rows["objects"]["change"]), (3.0, 2.0))
+        self.assertEqual((rows["objects"]["parent_runs"], rows["objects"]["change_runs"]), (3, 2))
+        table = bench_pairs.format_stages(bench_pairs.summarise_stages(recs))
+        self.assertIn("| alto_flow | objects | 3 | 2 | -33.3% | 3/2 |", table)
 
 
 if __name__ == "__main__":

@@ -251,8 +251,9 @@ object Bench {
 
     // One-time fixture generation (2,000 ALTO XML files) belongs to
     // test setup, not to q_alto_bulk's timed region: the query measures
-    // the XML-datasource scan, the same way the parquet tables aren't
-    // billed for the driver's testdata generation.
+    // the whole-file text scan and the AltoSimplify parse, the same way
+    // the parquet tables aren't billed for the driver's testdata
+    // generation.
     graft.alto.AltoModule.ensureBulkCorpus()
     // Same discipline for the real-media fixture: on a fresh machine
     // (every driver run) q_media_phash_real's FIRST sample otherwise

@@ -1,8 +1,7 @@
 package graft.alto
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
-import graft.functions.GraftFunctions.parseIntJs
 
 /** The reference's domain pipeline — ALTO OCR XML → simplified JSON +
   * transcript (`script/extract-text-lines-from-alto.js:23946-24072`,
@@ -35,63 +34,6 @@ object Alto {
   val NsV2 = "http://www.loc.gov/standards/alto/ns-v2#"
   val NsV3 = "http://www.loc.gov/standards/alto/ns-v3#"
 
-  /** Spark XML options mirroring xml2js 0.2 defaults (attrkey `$` →
-    * prefix `_`, charkey `_` → valueTag). */
-  val xmlOptions: Map[String, String] = Map(
-    "attributePrefix" -> "_",
-    "valueTag" -> "_VALUE",
-    "ignoreSurroundingSpaces" -> "false",
-    "mode" -> "PERMISSIVE")
-
-  /** Narrow-schema bulk ingest (r20, guide §6): one row per `<alto>`
-    * document of the files at `path`, through the StAX `xml` datasource
-    * (partitioned by file splits), with [[AltoSchema.altoBulk]] as the
-    * schema — only the fields the bulk token-accounting query reads.
-    * The parser skips converting the other three token attributes and
-    * the OCRProcessing subtree entirely (ReadSchema narrowing for a
-    * custom source). */
-  def readAltoXmlFilesBulk(spark: SparkSession, path: String): DataFrame =
-    spark.read.format("xml")
-      .options(xmlOptions + ("rowTag" -> "alto"))
-      .schema(AltoSchema.altoBulk)
-      .load(path)
-      .withColumn("alto", struct(col("_xmlns"), col("Description"), col("Layout")))
-      .select("alto")
-
-  /** The simplified document over the narrow bulk schema: the 6-level
-    * flatten, v2 truthy-CONTENT filter, and namespace dispatch of
-    * [[graft.functions.AltoSimplify]],
-    * with tokens carrying only (text, x) and the description reduced to
-    * (fileName, width) — exactly the fields q_alto_bulk consumes. Field
-    * semantics (head-of-array chains, JS parseInt, v3's undefined
-    * fileName) as in the full path. */
-  def simplifyBulk(alto: Column): Column = {
-    val toks = flatten(transform(ca(alto("Layout")), l =>
-      flatten(transform(ca(l("Page")), p =>
-        flatten(transform(ca(p("PrintSpace")), ps =>
-          flatten(transform(ca(ps("TextBlock")), tb =>
-            flatten(transform(ca(tb("TextLine")), tl =>
-              transform(ca(tl("String")), s => struct(
-                s("_CONTENT").as("text"),
-                parseIntJs(s("_HPOS")).as("x")))))))))))))
-    val fileName =
-      head(head(head(alto("Description"))("sourceImageInformation"))("fileName"))
-    val width = head(head(alto("Layout"))("Page"))("_WIDTH")
-    val ns = alto("_xmlns")
-    val nullToks = lit(null).cast(org.apache.spark.sql.types.ArrayType(
-      org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("text", org.apache.spark.sql.types.StringType),
-        org.apache.spark.sql.types.StructField("x", org.apache.spark.sql.types.IntegerType)))))
-    val nullStr = lit(null).cast("string")
-    when(ns === NsV2, struct(
-        fileName.as("fileName"), width.as("width"),
-        filter(toks, t => t("text").isNotNull && t("text") =!= "").as("text")))
-      .when(ns === NsV3, struct(
-        nullStr.as("fileName"), width.as("width"), toks.as("text")))
-      .otherwise(struct(
-        nullStr.as("fileName"), nullStr.as("width"), nullToks.as("text")))
-  }
-
   /** Failure policy for the per-URL fetch path. */
   sealed trait FetchPolicy
   object FetchPolicy {
@@ -114,8 +56,9 @@ object Alto {
     * client ([[HttpFetcher]]: timeouts, bounded retry with backoff),
     * swapped for a fixture lookup in tests — and runs once per URL on
     * the executors (the reference forks a whole Node process per URL
-    * instead). Prefer an `xml` datasource scan whenever the store
-    * supports it: a scan beats N point fetches.
+    * instead). Prefer a whole-file text scan (as `q_alto_bulk` reads
+    * its corpus) whenever the store supports it: a scan beats N point
+    * fetches.
     *
     * The input is hash-partitioned on `urlCol` into
     * `defaultParallelism` partitions before the fetch, so a work-list
@@ -144,9 +87,6 @@ object Alto {
             sum(when(col(outCol).isNull, 1).otherwise(0)).as("failed_fetches"))
     }
   }
-
-  private def ca(c: Column): Column = coalesce(c, array())
-  private def head(c: Column): Column = element_at(c, 1)
 
   /** Transcript = space-join of token texts in document order
     * (A1/F2, `flows/main_flow.py:70`). `array_join` skips null texts

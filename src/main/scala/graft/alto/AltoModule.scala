@@ -1,8 +1,11 @@
 package graft.alto
 
+import java.nio.file.{Files, Paths}
+
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.QueryModule
+import graft.sinks.LocalFiles
 
 /** Driver-contract registration for the ALTO domain pipeline.
   *
@@ -55,7 +58,7 @@ object AltoModule extends QueryModule {
       .orderBy("representation_id", "pos")
   }
 
-  /** Bulk-corpus size for the distributed XML-datasource demo. */
+  /** Bulk-corpus size for the distributed whole-file ingest demo. */
   private val BulkN = 2000
 
   /** Generator version — bump whenever the closed forms below (token
@@ -65,28 +68,21 @@ object AltoModule extends QueryModule {
   private val BulkV = "v2"
 
   /** Deterministic bulk ALTO corpus: [[BulkN]] v2 files generated once
-    * into a versioned temp directory (driver-side, ~2 MB total). File i
-    * carries fileName `page_<i>.tif`, page width `1000 + (i%5)*100`,
-    * and `3 + i%7` tokens `tok<i>_<j>` at HPOS `j*10` — closed forms
-    * the SQL oracle reconstructs with generate_series, independent of
-    * the XML path. This is the S2-at-scale posture: thousands of real
-    * files through the StAX datasource scan (schema supplied, so no
-    * inference pass), NOT from_xml over driver literals. The corpus is
+    * into a versioned temp directory (driver-side, ~2 MB total), one
+    * document per file — the reference's unit (one URL, one document).
+    * File i carries fileName `page_<i>.tif`, page width
+    * `1000 + (i%5)*100`, and `3 + i%7` tokens `tok<i>_<j>` at HPOS
+    * `j*10` — closed forms the SQL oracle reconstructs with
+    * generate_series, independent of the parse path. This is the
+    * S2-at-scale posture: thousands of real files through a file scan,
+    * NOT literals on the driver. The corpus is
     * scale-factor-independent by design (a fixed-size ingest fixture),
-    * so it is keyed by (BulkN, BulkV), not by the sf dir.
-    *
-    * Publication is crash/concurrency-safe: files are written into a
-    * process-unique staging directory and the COMPLETE directory is
-    * renamed into place — readers only ever see an absent directory or
-    * a fully written one, never a truncated XML mid-rewrite (two JVMs
-    * racing: one rename wins, the loser discards its staging copy). */
+    * so it is keyed by (BulkN, BulkV), not by the sf dir. It is
+    * published with [[graft.sinks.LocalFiles.publishOnce]], so a reader
+    * never sees a partly written corpus. */
   private def bulkDir(): String = synchronized {
-    val base = new java.io.File(System.getProperty("java.io.tmpdir"))
-    val d = new java.io.File(base, s"graft_alto_bulk_${BulkN}_$BulkV")
-    if (!new java.io.File(d, "_SUCCESS").exists()) {
-      val stage = new java.io.File(
-        base, s".graft_alto_bulk_stage_${java.util.UUID.randomUUID()}")
-      stage.mkdirs()
+    val dir = Paths.get(System.getProperty("java.io.tmpdir"), s"graft_alto_bulk_${BulkN}_$BulkV")
+    LocalFiles.publishOnce(dir) { stage =>
       (0 until BulkN).foreach { i =>
         val n = 3 + i % 7
         val toks = (0 until n).map(j =>
@@ -109,29 +105,20 @@ object AltoModule extends QueryModule {
              |    </Page>
              |  </Layout>
              |</alto>""".stripMargin
-        java.nio.file.Files.writeString(
-          new java.io.File(stage, f"alto_$i%05d.xml").toPath, xml)
+        Files.writeString(stage.resolve(f"alto_$i%05d.xml"), xml)
       }
-      new java.io.File(stage, "_SUCCESS").createNewFile()
-      // atomic publish; if another JVM already published, keep theirs
-      if (!stage.renameTo(d) && !new java.io.File(d, "_SUCCESS").exists())
-        throw new IllegalStateException(
-          s"bulk corpus publish failed: cannot rename $stage to $d")
-      if (stage.exists()) { // lost the race — drop the staging copy
-        stage.listFiles().foreach(_.delete()); stage.delete()
-      }
-    }
-    d.getAbsolutePath
+    }.toString
   }
 
   /** Pre-generate the bulk corpus (idempotent) — lets a bench harness
     * pay the one-time fixture generation outside any timed region, so
-    * `q_alto_bulk` measures the XML-datasource scan, not `Files.write`
+    * `q_alto_bulk` measures the scan and the parse, not `Files.write`
     * of 2,000 fixtures on a cold host. */
   private[graft] def ensureBulkCorpus(): Unit = { bulkDir(); () }
 
-  /** Distributed XML-datasource scan over the bulk corpus: per-file
-    * token accounting through the same simplify path the fixture
+  /** Distributed token accounting over the bulk corpus: one row per
+    * file (a whole-file text scan), each file one document, parsed by
+    * the same [[graft.functions.AltoSimplify]] kernel the fixture
     * queries pin, with the representation id recovered from the
     * document itself. Narrow per-row work (the token fold runs inside
     * the row); the only exchange is the presentation sort. */
@@ -140,27 +127,13 @@ object AltoModule extends QueryModule {
     // matching file sequentially on the driver (measured 4-7 s for the
     // 2,000-file corpus vs one listStatus call for the directory);
     // _SUCCESS is skipped automatically as a hidden file.
-    // r20: the NARROW-schema reader (AltoSchema.altoBulk) — the StAX
-    // parser converts only the fields this query reads (namespace,
-    // fileName, page width, token CONTENT + HPOS), skipping the other
-    // three token attributes and the OCRProcessing subtree; simplifyBulk
-    // mirrors the AltoSimplify kernel's dispatch/filter semantics over the
-    // narrow struct. Same rows at all SFs (oracle is the generator's
-    // closed form, swept).
-    val raw = Alto.readAltoXmlFilesBulk(spark, bulkDir())
-    // NO checkpoint staging here, deliberately: CollapseProject does
-    // inline the simplify tree into each of the five field reads, but
-    // the whole inlined projection is codegen'd and measured at 0.33 s
-    // warm on the 2000-file corpus — while a checkpointSer staging
-    // barrier costs 4.4 s materializing the deep structs to block
-    // storage. The docToks-style staging rule applies to LAMBDA-sliced
-    // token arrays re-evaluated per element, not to a flat projection.
-    raw.select(Alto.simplifyBulk(col("alto")).as("simplified"))
+    spark.read.option("wholetext", "true").text(bulkDir())
+      .select(graft.functions.AltoSimplify(col("value")).as("simplified"))
       .select(
-        regexp_extract(col("simplified")("fileName"),
+        regexp_extract(col("simplified")("description")("fileName"),
           "page_(\\d+)\\.tif", 1).cast("bigint").as("rep_id"),
         size(col("simplified")("text")).cast("bigint").as("n_tokens"),
-        col("simplified")("width").as("page_width"),
+        col("simplified")("description")("width").as("page_width"),
         aggregate(col("simplified")("text"), lit(0L),
           (acc, t) => acc + t.getField("x")).as("sum_x"),
         element_at(col("simplified")("text"), 1).getField("text").as("first_tok"))

@@ -715,9 +715,9 @@ object MultimodalModule extends QueryModule {
   * registered query needs to exercise the pixel-decode branch (the
   * driver corpus's payloads are synthetic text bytes, never a
   * decodable image). Written once per machine under java.io.tmpdir
-  * behind a completion marker (the AltoModule.ensureBulkCorpus
-  * discipline); contents are generated in-process, byte-deterministic
-  * given the JDK's PNG/JPEG encoders:
+  * and published whole ([[graft.sinks.LocalFiles.publishOnce]], as the
+  * ALTO bulk corpus is); contents are generated in-process,
+  * byte-deterministic given the JDK's PNG/JPEG encoders:
   *
   *  - `pic_a.png` / `pic_a_reenc.jpg` — the SAME plateau picture
   *    through two encoders: the pair the perceptual query must rank
@@ -758,13 +758,11 @@ private[graft] object MediaFixtures {
     Array.tabulate(n)(i => ((i * 37 + seed * 101 + 0x80) & 0xFF).toByte)
 
   def ensure(): String = synchronized {
-    val dir = new java.io.File(
-      System.getProperty("java.io.tmpdir"), "graft_media_fixture_v1")
-    val marker = new java.io.File(dir, ".complete")
-    if (!marker.exists()) {
-      dir.mkdirs()
+    val dir = java.nio.file.Paths.get(
+      System.getProperty("java.io.tmpdir"), "graft_media_fixture_v2")
+    graft.sinks.LocalFiles.publishOnce(dir) { stage =>
       def put(name: String, bytes: Array[Byte]): Unit =
-        java.nio.file.Files.write(new java.io.File(dir, name).toPath, bytes)
+        java.nio.file.Files.write(stage.resolve(name), bytes)
       val picA = plateau(Array(30, 200, 80, 230, 10, 160, 60, 250, 110))
       val picB = plateau(Array(10, 40, 70, 100, 130, 160, 190, 220, 250))
       put("pic_a.png", encode(picA, "png"))
@@ -773,8 +771,6 @@ private[graft] object MediaFixtures {
       put("hiss.wav", blob(1, 512))
       put("tone.wav", blob(2, 512))
       put("clip.mp4", blob(3, 768))
-      marker.createNewFile()
-    }
-    dir.toString
+    }.toString
   }
 }

@@ -21,6 +21,14 @@ object AltoReference {
 
   private val strArr = arr(StringType)
 
+  /** Spark XML options mirroring xml2js 0.2 defaults (attrkey `$` →
+    * prefix `_`, charkey `_` → valueTag). */
+  val xmlOptions: Map[String, String] = Map(
+    "attributePrefix" -> "_",
+    "valueTag" -> "_VALUE",
+    "ignoreSurroundingSpaces" -> "false",
+    "mode" -> "PERMISSIVE")
+
   /** Schema for ALTO v2/v3 XML as parsed by `from_xml` / the `xml`
     * datasource (`attributePrefix` = "_"), mirroring the xml2js 0.2
     * defaults the reference relies on
@@ -55,7 +63,7 @@ object AltoReference {
     * `xml` datasource (StAX, partitioned by file splits). */
   def readAltoXmlFiles(spark: SparkSession, path: String): DataFrame =
     spark.read.format("xml")
-      .options(Alto.xmlOptions + ("rowTag" -> "alto"))
+      .options(xmlOptions + ("rowTag" -> "alto"))
       .schema(altoSchema)
       .load(path)
       .withColumn("alto", struct(col("_xmlns"), col("Description"), col("Layout")))
@@ -64,7 +72,7 @@ object AltoReference {
   /** Parse an XML string column into the ALTO struct (`from_xml`). */
   def parseXml(xmlCol: Column): Column =
     from_xml(xmlCol, altoSchema,
-      scala.jdk.CollectionConverters.MapHasAsJava(Alto.xmlOptions).asJava)
+      scala.jdk.CollectionConverters.MapHasAsJava(xmlOptions).asJava)
 
   private def ca(c: Column): Column = coalesce(c, array())
   private def head(c: Column): Column = element_at(c, 1)

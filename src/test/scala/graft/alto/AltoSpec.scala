@@ -292,4 +292,37 @@ class AltoSpec extends SparkSpec
     val banned = Set("XmlToStructs", "ArrayTransform", "ArrayFilter")
     assert(exprs.map(_.getClass.getSimpleName).filter(banned).isEmpty)
   }
+
+  test("q_alto_bulk plan: one kernel over a whole-file text scan, rows equal the reference model's") {
+    val out = AltoModule.queries("q_alto_bulk")(spark, "")
+    val rows = out.collect()
+    val plan = out.queryExecution.executedPlan
+    val exprs = collect(plan) { case p => p }
+      .flatMap(_.expressions.flatMap(_.collect { case e => e }))
+    assert(exprs.count(_.isInstanceOf[AltoSimplify]) == 1)
+    val banned = Set("XmlToStructs", "ArrayTransform", "ArrayFilter")
+    assert(exprs.map(_.getClass.getSimpleName).filter(banned).isEmpty)
+    val formats = collect(plan) {
+      case s: org.apache.spark.sql.execution.FileSourceScanExec => s.relation.fileFormat
+    }
+    assert(formats.nonEmpty)
+    assert(!formats.exists(_.getClass.getName.toLowerCase.contains("xml")), formats)
+
+    // the same projection over the reference model's parse of the same directory
+    val dir = new java.io.File(new java.net.URI(out.inputFiles.head)).getParent
+    val s = col("s")
+    val ref = AltoReference.readAltoXmlFiles(spark, dir)
+      .select(AltoReference.simplify($"alto").as("s"))
+      .select(
+        regexp_extract(s("description")("fileName"), "page_(\\d+)\\.tif", 1)
+          .cast("bigint").as("rep_id"),
+        size(s("text")).cast("bigint").as("n_tokens"),
+        s("description")("width").as("page_width"),
+        aggregate(s("text"), lit(0L), (acc, t) => acc + t.getField("x")).as("sum_x"),
+        element_at(s("text"), 1).getField("text").as("first_tok"))
+      .orderBy("rep_id")
+    assert(rows.length == 2000)
+    assert(rows.head == Row(0L, 3L, "1000", 30L, "tok0_0"))
+    assert(rows.toSeq == ref.collect().toSeq)
+  }
 }

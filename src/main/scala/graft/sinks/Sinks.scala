@@ -1,11 +1,12 @@
 package graft.sinks
 
 import java.nio.charset.StandardCharsets
+import java.nio.file.Paths
 import java.sql.{Connection, PreparedStatement, SQLException, SQLNonTransientException}
 
-import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.util.SerializableConfiguration
 
 /** Sink operators (SURVEY.md §2.1 S5–S8). The reference uploads one
   * pretty-printed JSON object per record to S3
@@ -29,6 +30,11 @@ import org.apache.spark.sql.{DataFrame, Row}
   * once; coalesce before calling to bound concurrent connections
   * against the target store. Local objects are written with NIO
   * ([[LocalFiles]]): no `.crc` sidecar and no `chmod` fork per object.
+  *
+  * Filesystem sinks resolve their paths with the session's Hadoop
+  * configuration (`spark.hadoop.*` and session `fs.*` settings, such as
+  * s3a endpoints and credentials), taken once on the driver as Spark's
+  * own file writers do, not with a fresh `Configuration` per task.
   */
 object Sinks {
 
@@ -45,17 +51,25 @@ object Sinks {
                         outDir: String): Unit = {
     val ki = df.schema.fieldIndex(keyCol)
     val pi = df.schema.fieldIndex(payloadCol)
+    val conf = df.sparkSession.sessionState.newHadoopConf()
+    val base = new Path(outDir)
+    val fs = base.getFileSystem(conf)
+    val root = base.makeQualified(fs.getUri, fs.getWorkingDirectory)
+    // decided here: a local target is written with NIO and its tasks
+    // need no Hadoop configuration; any other scheme ships the
+    // session's, which costs each task a deserialization of over a
+    // thousand entries
+    val remote =
+      if (LocalFiles.nioPath(fs, root).isDefined) None else Some(new SerializableConfiguration(conf))
     df.foreachPartition { rows: Iterator[Row] =>
-      val conf = new Configuration()
-      val base = new Path(outDir)
-      val fs = base.getFileSystem(conf)
+      val remoteFs = remote.map(c => root.getFileSystem(c.value))
       rows.foreach { r =>
         if (!r.isNullAt(ki) && !r.isNullAt(pi)) {
-          val key = new Path(base, r.getString(ki))
+          val key = new Path(root, r.getString(ki))
           val bytes = r.getString(pi).getBytes(StandardCharsets.UTF_8)
-          LocalFiles.nioPath(fs, key) match {
-            case Some(local) => LocalFiles.write(local, bytes)
-            case None =>
+          remoteFs match {
+            case None => LocalFiles.write(Paths.get(key.toUri), bytes)
+            case Some(fs) =>
               val out = fs.create(key, true)
               try out.write(bytes) finally out.close()
           }
@@ -198,7 +212,7 @@ object Sinks {
   def exactlyOnceBatch(markerDir: String)(write: (DataFrame, Long) => Unit)
       : (DataFrame, Long) => Unit = { (batch: DataFrame, batchId: Long) =>
     val base = new Path(markerDir)
-    val fs = base.getFileSystem(new Configuration())
+    val fs = base.getFileSystem(batch.sparkSession.sessionState.newHadoopConf())
     val marker = new Path(base, s"batch-$batchId")
     if (!fs.exists(marker)) {
       write(batch, batchId)

@@ -16,10 +16,17 @@ import org.apache.spark.sql.functions._
   *    (the reference's literal shape; join pushdown included, at the
   *    cost of an opaque plan on the Spark side).
   *
-  * [[worklist]] composes the reference's work-list semantics from two
-  * [[table]] scans — equality + LIKE + optional incremental range
-  * predicate, all pushed per-table; the join runs in Spark (Spark does
-  * not push joins into JDBC — SURVEY.md §4).
+  * [[worklist]] reads the reference's work-list as one [[table]] scan
+  * whose relation is the `file` ⋈ `includes` subquery, so the database
+  * runs the join with its own indexes, as Postgres does for the
+  * reference. Mime equality, the LIKE and the optional incremental range
+  * predicate are DataFrame filters on top, which Catalyst compiles into
+  * the WHERE of the one SQL statement sent. Joining two table scans in
+  * Spark instead (Spark does not push joins into JDBC — SURVEY.md §4)
+  * reads all of `includes` on every sync, and because JDBC relations
+  * carry no size estimate the join plans as a sort-merge join: two scan
+  * shuffles and a broadcast, three extra Spark jobs before the first
+  * document is fetched.
   *
   * Scale posture: a single JDBC query is one partition — fine for a
   * metadata catalog, wrong for a large table. Callers parallelize with
@@ -31,9 +38,8 @@ import org.apache.spark.sql.functions._
   * still fans out downstream: `Alto.fetchXml` hash-partitions it on
   * the URL over `defaultParallelism` partitions before fetching.
   *
-  * The environment has no database, so these are exercised against a
-  * recording stub driver (JdbcSourceSpec) the way the sink side is —
-  * the test asserts the pushed-down SQL that arrives at the driver.
+  * JdbcSourceSpec asserts the SQL that reaches a recording stub driver;
+  * JdbcWorklistDerbySpec runs the work-list on embedded Derby.
   */
 object JdbcSource {
 
@@ -63,18 +69,21 @@ object JdbcSource {
     * schema name contains 'alto', joined to the representation that
     * includes them, optionally restricted to rows updated on/after
     * `since` (the incremental watermark, reference
-    * `flows/main_flow.py:29-30`). Equality/LIKE/range predicates are
-    * pushed into the per-table SQL; the equi-join runs in Spark. */
+    * `flows/main_flow.py:29-30`). One relation, the joined subquery
+    * (`dbtable`, not `query`: Spark rejects `query` together with
+    * `partitionColumn`); the filters are pushed into its WHERE, and
+    * `since` stays a Spark literal, never spliced into the SQL text. */
   def worklist(spark: SparkSession, url: String,
                fileTable: String, includesTable: String,
                since: Option[String] = None,
                extraOptions: Map[String, String] = Map.empty): DataFrame = {
-    val file0 = table(spark, url, fileTable, extraOptions)
+    val joined = "(SELECT i.representation_id, f.premis_stored_at, " +
+      "f.ebucore_has_mime_type, f.schema_name, f.updated_at " +
+      s"FROM $fileTable f JOIN $includesTable i ON f.id = i.file_id) wl"
+    val wl0 = table(spark, url, joined, extraOptions)
       .filter(col("ebucore_has_mime_type") === lit("application/xml") &&
         col("schema_name").like("%alto%"))
-    val file = since.fold(file0)(s => file0.filter(col("updated_at") >= lit(s)))
-    val includes = table(spark, url, includesTable, extraOptions)
-    file.join(includes, file("id") === includes("file_id"))
+    since.fold(wl0)(s => wl0.filter(col("updated_at") >= lit(s)))
       .select(col("representation_id"), col("premis_stored_at"))
   }
 }

@@ -1,7 +1,13 @@
 package graft.sinks
 
 import java.lang.reflect.{InvocationHandler, Method, Proxy}
+import java.net.URI
 import java.sql.{Connection, PreparedStatement}
+
+import org.apache.hadoop.conf.Configuration
+import org.apache.hadoop.fs.{FSDataOutputStream, FileStatus, FilterFileSystem, Path, RawLocalFileSystem}
+import org.apache.hadoop.fs.permission.FsPermission
+import org.apache.hadoop.util.Progressable
 
 import scala.collection.mutable
 import scala.jdk.CollectionConverters._
@@ -95,6 +101,33 @@ object JdbcRecorder {
       }).asInstanceOf[PreparedStatement]
 }
 
+/** A filesystem that only the session's Hadoop settings know: scheme
+  * [[SessionOnlyFs.Scheme]], serving the local disk through a
+  * `FilterFileSystem` (so the object sink takes its generic
+  * `FileSystem.create` path, not the local NIO one). A writer that
+  * resolves paths with a fresh `Configuration` finds no such scheme. */
+class SessionOnlyFs extends FilterFileSystem(new RawLocalFileSystem) {
+  override def getScheme: String = SessionOnlyFs.Scheme
+  override def getUri: URI = URI.create(s"${SessionOnlyFs.Scheme}:///")
+  override def initialize(name: URI, conf: Configuration): Unit = {
+    setConf(conf)
+    fs.initialize(URI.create("file:///"), conf)
+  }
+  private def local(p: Path): Path = new Path("file", null, p.toUri.getPath)
+  override def create(f: Path, permission: FsPermission, overwrite: Boolean, bufferSize: Int,
+                      replication: Short, blockSize: Long,
+                      progress: Progressable): FSDataOutputStream =
+    fs.create(local(f), permission, overwrite, bufferSize, replication, blockSize, progress)
+  override def getFileStatus(f: Path): FileStatus = fs.getFileStatus(local(f))
+  override def exists(f: Path): Boolean = fs.exists(local(f))
+  override def mkdirs(f: Path): Boolean = fs.mkdirs(local(f))
+  override def mkdirs(f: Path, permission: FsPermission): Boolean = fs.mkdirs(local(f), permission)
+}
+
+object SessionOnlyFs {
+  val Scheme = "graftsession"
+}
+
 class SinksSpec extends SparkSpec {
   import spark.implicits._
 
@@ -135,6 +168,24 @@ class SinksSpec extends SparkSpec {
     assert(listing(dir) == Map("a.json" -> """{"v":1}"""))
     val in = fs.open(new org.apache.hadoop.fs.Path(dir.toString, "a.json"))
     try assert(new String(in.readAllBytes(), "UTF-8") == """{"v":1}""") finally in.close()
+  }
+
+  test("filesystem sinks resolve paths with the session's Hadoop settings") {
+    val dir = java.nio.file.Files.createTempDirectory("graft-objs-session")
+    val out = s"${SessionOnlyFs.Scheme}://$dir"
+    val settings = Map(
+      s"fs.${SessionOnlyFs.Scheme}.impl" -> classOf[SessionOnlyFs].getName,
+      // keep the instance out of Hadoop's process-wide FileSystem cache
+      s"fs.${SessionOnlyFs.Scheme}.impl.disable.cache" -> "true")
+    settings.foreach { case (k, v) => spark.conf.set(k, v) }
+    try {
+      Sinks.writeObjectPerRow(Seq(("a.json", "{}"), ("sub/b.json", "[]")).toDF("s3_key", "payload"),
+        "s3_key", "payload", out)
+      assert(listing(dir) == Map("a.json" -> "{}", "sub/b.json" -> "[]"))
+      val land = Sinks.exactlyOnceBatch(s"$out/markers") { (_, _) => () }
+      land(Seq(1).toDF("x"), 3L)
+      assert(java.nio.file.Files.exists(dir.resolve("markers/batch-3")))
+    } finally settings.keys.foreach(spark.conf.unset)
   }
 
   test("writePartitioned lays out hive-style partition directories") {

@@ -3,8 +3,8 @@ package graft.sources
 import graft.SparkSpec
 
 /** Source-side JDBC tests against the recording stub driver — proves
-  * the worklist predicates are PUSHED into the SQL that arrives at the
-  * database (the reference executes them in Postgres,
+  * the worklist join and predicates are PUSHED into the SQL that arrives
+  * at the database (the reference executes them in Postgres,
   * `flows/main_flow.py:22-44`), not evaluated post-scan, and that the
   * pushed-SQL form ships the query text verbatim. */
 class JdbcSourceSpec extends SparkSpec {
@@ -28,8 +28,16 @@ class JdbcSourceSpec extends SparkSpec {
 
   StubDb.registerTable("graph_file", fileTable)
   StubDb.registerTable("graph_includes", includesTable)
+  // the database's answer to the work-list's join subquery: file ⋈
+  // includes on id = file_id, before any filter
+  StubDb.registerQuery("FROM graph_file f JOIN graph_includes i ON f.id = i.file_id",
+    StubDb.Table(
+      Seq("representation_id", "premis_stored_at", "ebucore_has_mime_type", "schema_name",
+        "updated_at"),
+      for (i <- includesTable.rows; f <- fileTable.rows if f(0) == i(0))
+        yield Seq(i(1), f(3), f(1), f(2), f(4))))
 
-  test("worklist joins two JDBC scans and pushes mime/LIKE filters into the SQL") {
+  test("worklist sends one joined query and pushes mime/LIKE filters into its SQL") {
     val bucket = "wl1"
     StubDb.clearLog(bucket)
     val rows = JdbcSource.worklist(spark, s"jdbc:graftstub:$bucket",
@@ -41,6 +49,10 @@ class JdbcSourceSpec extends SparkSpec {
       s.contains("\"ebucore_has_mime_type\" = 'application/xml'") &&
         s.contains("\"schema_name\" LIKE '%alto%'")),
       s"filters not pushed; received:\n${pushed.mkString("\n")}")
+    // the database runs the join: one data query, not one per table
+    val dataReads = pushed.filterNot(_.contains("WHERE 1=0"))
+    assert(dataReads.size == 1 && dataReads.head.contains("JOIN"),
+      s"expected one joined data query; received:\n${pushed.mkString("\n")}")
   }
 
   test("incremental worklist pushes the watermark range predicate") {

@@ -7,15 +7,16 @@ import java.util.Properties
 import java.util.logging.Logger
 
 import scala.collection.mutable
+import scala.jdk.CollectionConverters._
 
 /** In-memory recording JDBC database for the source-side tests — the
   * twin of the sink side's JdbcRecorder (SinksSpec): registered tables
   * of VARCHAR columns, a mini evaluator for exactly the WHERE shapes
   * Spark's JDBC pushdown compiles (`("c" IS NOT NULL)`, `("c" = 'v')`,
   * `("c" >= 'v')`, `("c" LIKE '%v%')`), canned results for pushed-SQL
-  * subqueries, and a per-bucket log of every SQL string that arrives —
-  * what the pushdown assertions read. Buckets (the URL suffix) isolate
-  * parallel suites. */
+  * subqueries (filtered and projected like a table), and a per-bucket
+  * log of every SQL string that arrives — what the pushdown assertions
+  * read. Buckets (the URL suffix) isolate parallel suites. */
 object StubDb {
   /** `types` holds java.sql.Types per column; empty = all VARCHAR.
     * Row values are stored as strings regardless (BIGINT columns hold
@@ -32,8 +33,9 @@ object StubDb {
     new java.util.concurrent.ConcurrentHashMap[String, mutable.Buffer[String]]()
 
   def registerTable(name: String, t: Table): Unit = tables.put(name, t)
-  /** Canned result for a pushed-SQL subquery: served when the inner
-    * query text appears in the received statement. */
+  /** Canned result for a pushed-SQL subquery: the rows of
+    * `FROM (<subquery>) alias` when the subquery text contains
+    * `sqlFragment`. */
   def registerQuery(sqlFragment: String, t: Table): Unit = canned.put(sqlFragment, t)
 
   def log(bucket: String): List[String] =
@@ -87,23 +89,15 @@ object StubDb {
   }
 
   /** Serve one SQL statement: resolve the FROM target (registered
-    * table or canned subquery), apply the WHERE conjunction, project
-    * the SELECT list. */
+    * table, or canned result of a parenthesised subquery), apply the
+    * WHERE conjunction, project the SELECT list. */
   private[sources] def run(bucket: String, sql: String): Table = {
     addLog(bucket, sql)
-    val cannedHit = canned.entrySet().iterator()
-    while (cannedHit.hasNext) {
-      val e = cannedHit.next()
-      if (sql.contains(e.getKey)) {
-        return if (sql.contains("WHERE 1=0")) e.getValue.copy(rows = Nil) else e.getValue
-      }
-    }
-    val m = """(?s)SELECT\s+(.*?)\s+FROM\s+(\S+)(?:\s+WHERE\s+(.*))?\s*$""".r
+    val m = """(?s)SELECT\s+(.*?)\s+FROM\s+(.*)$""".r
       .findFirstMatchIn(sql)
       .getOrElse(sys.error(s"stub cannot parse: $sql"))
-    val t = Option(tables.get(m.group(2)))
-      .getOrElse(sys.error(s"stub: unknown table ${m.group(2)}"))
-    val where = Option(m.group(3))
+    val (t, rest) = from(m.group(2).trim)
+    val where = """(?s)^WHERE\s+(.*?)\s*$""".r.findFirstMatchIn(rest).map(_.group(1))
     val rows =
       if (where.contains("1=0")) Nil
       else where match {
@@ -122,6 +116,26 @@ object StubDb {
       Table(cols, rows.map(r => idx.map(r)), idx.map(t.typeOf))
     }
   }
+
+  /** The FROM target's rows and the text after it. `(<subquery>) alias`
+    * resolves to the canned result whose fragment the subquery
+    * contains; a bare name to a registered table. */
+  private def from(target: String): (Table, String) =
+    if (target.startsWith("(")) {
+      // the subquery ends where the paren depth first returns to 0
+      val end = target.scanLeft(0)((d, c) => d + (if (c == '(') 1 else if (c == ')') -1 else 0))
+        .indexWhere(_ == 0, 1)
+      val inner = target.substring(1, end - 1)
+      val t = canned.asScala.collectFirst { case (frag, t) if inner.contains(frag) => t }
+        .getOrElse(sys.error(s"stub: no canned result for subquery $inner"))
+      // drop the alias
+      (t, target.substring(end).trim.split("\\s+", 2).drop(1).mkString)
+    } else {
+      val parts = target.split("\\s+", 2)
+      val t = Option(tables.get(parts(0)))
+        .getOrElse(sys.error(s"stub: unknown table ${parts(0)}"))
+      (t, parts.drop(1).mkString)
+    }
 }
 
 /** Minimal concrete java.sql.Driver serving StubDb tables. URL form:

@@ -49,7 +49,7 @@ object HttpFetcher {
   final class FetchFailed(msg: String, cause: Throwable)
     extends RuntimeException(msg, cause)
 
-  private final class StatusException(val status: Int, url: String)
+  private final class StatusException(status: Int, url: String)
     extends RuntimeException(s"HTTP $status for $url")
 
   /** One HttpClient per (JVM, connect-timeout) — executors build it on

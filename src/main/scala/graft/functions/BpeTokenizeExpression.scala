@@ -99,9 +99,6 @@ object Bpe {
     out ++= toks
   }
 
-  private[functions] def encodeWord(word: String, out: ArrayBuffer[String]): Unit =
-    encodeWordWith(word, Merges, out)
-
   /** Whole-document kernel: NULL in → NULL out; whitespace-only text →
     * empty token array (matches the oracle's filtered split). */
   def compute(s: UTF8String): GenericArrayData = computeWith(s, Merges)

@@ -32,13 +32,4 @@ object GraftFunctions {
     * (reference `flows/main_flow.py:150`). */
   def publicUrl(endpoint: String, bucket: String, keyCol: Column): Column =
     concat_ws("/", lit(endpoint), lit(bucket), keyCol)
-
-  /** UTF-8 encode for a binary sink payload (reference
-    * `flows/main_flow.py:144`). */
-  def utf8Bytes(c: Column): Column = encode(c, "UTF-8")
-
-  /** Watermark date formatting, `%Y-%m-%d` (reference
-    * `flows/main_flow.py:130`) — the mark format WatermarkStore
-    * persists between incremental runs. */
-  def runDate(c: Column): Column = date_format(c, "yyyy-MM-dd")
 }

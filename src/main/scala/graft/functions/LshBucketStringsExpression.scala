@@ -34,7 +34,7 @@ import org.apache.spark.unsafe.types.UTF8String
   * (a NaN component, or ±Inf components cancelling) emits '1' — a raw
   * Java `acc >= 0` would emit '0' and split such a vector across the
   * fused/composed boundary: pre-fusion persisted buckets and
-  * post-fusion appends/stream probes would never collide for it
+  * post-fusion appends/probes would never collide for it
   * (embBase's `nrm > 0` filter does NOT exclude non-finite vectors;
   * NaN > 0 is true in Spark too). A NULL vector, a length≠dim vector,
   * or any NULL element yields the all-zero bucket in every table —

@@ -27,9 +27,9 @@ import graft.sources.Tables
 object Corpus {
 
   /** doc_ids dropped as exact duplicates (keep-lowest-id policy).
-    * Fingerprints via Dedup.normText — the ONE normalization shared by
-    * batch exact-dedup and the streaming ingest tier, so the cleaner
-    * cannot silently de-synchronize from them. Window-min over the
+    * Fingerprints via Dedup.normText — the ONE normalization shared
+    * with exact-dedup, so the cleaner cannot silently de-synchronize
+    * from it. Window-min over the
     * fingerprint, never collect_list: a document copied n times stays
     * n rows through the window instead of one n-element array row —
     * the hot-key OOM shape at corpus scale. */

@@ -165,9 +165,6 @@ object Curation {
   private val bloomCache =
     graft.sources.SessionSweep.scoped(new java.util.concurrent.ConcurrentHashMap[String, Option[Array[Byte]]]())
 
-  /** Test hook (cache-vs-rebuild equivalence). */
-  private[operators] def clearBloomCache(): Unit = bloomCache.clear()
-
   def decontaminateBloom(spark: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.catalyst.expressions.{BloomFilterMightContain, XxHash64}
     import org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate

@@ -61,7 +61,7 @@ object Dedup {
     * the same lambda-variable binding as minhashOfText (the token
     * array is bound once; CollapseProject cannot inline through a
     * higher-order-function lambda). For batch-sized inputs (index
-    * appends, streams) where a memoized checkpoint would be waste. */
+    * appends) where a memoized checkpoint would be waste. */
   private def shingleOfText(text: Column): Column =
     element_at(transform(array(toks(text)), t => shingleArray(t)), 1)
 
@@ -569,8 +569,8 @@ object Dedup {
     * Per-document artifacts (shingles, inverted shingle index, MinHash
     * signatures and bands, SimHash fingerprints, embedding base and
     * LSH buckets) decompose row-wise: the batch's rows are computed at
-    * batch size — via the same lambda-bound single-expression staging
-    * the streaming path uses, no checkpoint residency — and appended.
+    * batch size — via lambda-bound single-expression staging
+    * ([[minhashOfText]]), no checkpoint residency — and appended.
     * The candidate-pair table does NOT decompose (shingle document
     * frequencies and star minima are corpus-global), so it is
     * re-derived — but from the just-appended parquet shingle
@@ -816,10 +816,9 @@ object Dedup {
     // persist, and re-prime so the session serves the new file.
     // `rebuildPairs = false` defers this — the rebuild is the dominant
     // append cost and nothing on the ingest path reads the pair table
-    // (the near-dup stream joins the band index; incremental dedup
-    // derives its own candidates), so an operational pipeline can run
-    // cheap per-batch appends and refresh the pair table asynchronously
-    // on its own schedule by calling rebuildPairTable — the deferred
+    // (incremental dedup derives its own candidates), so an
+    // operational pipeline can run cheap per-batch appends and refresh
+    // the pair table asynchronously on its own schedule by calling rebuildPairTable — the deferred
     // call produces a byte-identical artifact (IndexPersistenceSpec
     // pins deferred-then-rebuild ≡ eager). Until that refresh, the
     // persisted pair table reflects the pre-append corpus.
@@ -1713,8 +1712,8 @@ object Dedup {
     docShingles(spark, dir)
       .select(col("doc_id"), size(col("sh")).as("n_sh"), explode(col("sh")).as("shingle"))
 
-  // shared with streaming.IngestDedup — the stream-side fingerprint
-  // must be byte-identical to the batch family's
+  // the exact-dedup fingerprint, shared with Corpus's cleaner and the
+  // q_stream_parity_batch ingest head
   private[graft] def normText(c: Column): Column =
     lower(trim(regexp_replace(c, "\\s+", " ")))
 
@@ -2493,33 +2492,33 @@ object Dedup {
 
   /** Array of per-band bucket hashes over a signature column: band j
     * is md5 of the comma-joined signature slice [j*r, (j+1)*r). Shared
-    * by the batch candidate join, the persisted band-bucket artifact,
-    * and the streaming ingest's query side — all three MUST bucket
-    * identically or stream/batch recall diverges. */
+    * by the candidate join and the persisted band-bucket artifact —
+    * both MUST bucket identically or an appended batch never collides
+    * with the persisted corpus. */
   private[graft] def bandHashes(sig: Column, bandRows: Int = 2): Column =
     array((0 until NumHashes / bandRows).map { j =>
       md5(concat_ws(",", slice(sig, j * bandRows + 1, bandRows)))
     }: _*)
 
   /** MinHash signature of a raw text column in ONE expression tree —
-    * the streaming-safe twin of the batch docShingles→minhashSignatures
-    * pipeline (a stream cannot localCheckpoint its projection stages).
-    * The checkpoint barriers exist only to stop CollapseProject from
-    * re-inlining multiply-referenced arrays; here each stage is bound
-    * as a higher-order-function lambda variable instead (a singleton
-    * `transform`), which Catalyst cannot inline through: tokens are
-    * split once, shingle hashes are built once, and the 32 min-hash
-    * probes all read the bound `hs` value. Byte-identical output to
-    * the batch path (IngestDedupSpec pins parity). */
+    * the append path's twin of the docShingles→minhashSignatures
+    * pipeline (a batch-sized append does not localCheckpoint its
+    * projection stages). The checkpoint barriers exist only to stop
+    * CollapseProject from re-inlining multiply-referenced arrays; here
+    * each stage is bound as a higher-order-function lambda variable
+    * instead (a singleton `transform`), which Catalyst cannot inline
+    * through: tokens are split once, shingle hashes are built once,
+    * and the 32 min-hash probes all read the bound `hs` value.
+    * Byte-identical output to the checkpointed path (DedupSpec pins
+    * the parity). */
   private[graft] def minhashOfText(text: Column): Column =
     element_at(transform(array(toks(text)), t =>
       element_at(transform(array(shingleHashes(shingleArray(t))), hs =>
         minhashSignature(hs)), 1)), 1)
 
   /** Materialized (doc_id, band_idx, band_hash) LSH band-bucket table —
-    * the inverted index a streaming ingest probes with a stream-static
-    * join (IngestDedup.nearDupIngest); persisted/primed via
-    * writeIndexes/primeIndexes like every other index artifact. */
+    * persisted/primed via writeIndexes/primeIndexes like every other
+    * index artifact. */
   private[graft] def minhashBandTable(spark: SparkSession, dir: String): DataFrame =
     memo(spark, s"minhashBands|$dir") { checkpointSer(minhashBandsPlan(spark, dir)) }
 

@@ -451,15 +451,14 @@ object EmbeddingOps {
 
   /** The PSI scoring kernel over a (cell, n_ref, n_cur) occupancy
     * table — shared verbatim by the registered snapshot-halves query
-    * above and the streaming ingest gate
-    * ([[graft.streaming.DriftGate]]), so a stream batch's PSI is
-    * byte-identical to the batch formulation of the same counts. */
+    * above and the batch-vs-corpus [[driftReport]], so both score the
+    * same counts identically. */
   private[graft] def psiReport(cnt: DataFrame, kCells: Int): DataFrame = {
     // totals as GLOBAL WINDOW sums over the K-row occupancy table (a
     // single-partition exchange of K rows — negligible) instead of
     // agg + crossJoin: the crossJoin formulation referenced `cnt`
     // from two unpersisted subtrees and the final plan evaluated the
-    // upstream (for DriftGate: the batch assignment scan) ~4×. One
+    // upstream (for driftReport: the batch assignment scan) ~4×. One
     // window pass evaluates it once; the decimal sums are exact either
     // way, so every emitted value is unchanged.
     val all = Window.partitionBy(lit(1))
@@ -484,7 +483,7 @@ object EmbeddingOps {
   /** The CTE chain of the [[psiReport]] SQL twin (tot/sh/co) over
     * whatever `cnt(cell, n_ref, n_cur)` CTE the WITH head defines —
     * split from [[psiSqlTail]] so oracles that need a different final
-    * reduction over `co` (the streaming drift-gate parity checksum)
+    * reduction over `co` (the q_stream_parity_drift checksum)
     * share the share/contrib arithmetic verbatim. */
   private[operators] def psiSqlCtes(kCells: Int): String =
     s"""tot AS (SELECT SUM(n_ref) AS t_ref, SUM(n_cur) AS t_cur FROM cnt),
@@ -521,21 +520,31 @@ object EmbeddingOps {
        |  FROM assign GROUP BY cell),
        |${psiSqlTail(cents.length)}""".stripMargin
 
-  /** Streaming drift-gate parity head — the registered BATCH side of
-    * the [[graft.streaming.DriftGate]] parity pair (the r18 "streaming
-    * heads have no driver-visible entries" gap, closed one head at a
-    * time: funnel/EWMA/ingest-dedup in q_stream_parity_batch, quality
-    * in q_stream_parity_quality, drift here). Replays a FIXED ingest
-    * batch (the even vec_ids) through [[graft.streaming.DriftGate
-    * .driftReport]]'s exact composition — reference = the maintained
-    * full-corpus cell occupancy, current = the batch assigned under
-    * the SAME frozen fitted quantizer, full-join survival of one-sided
-    * cells — and reduces the K-cell report to one checksum row, so a
-    * drifted batch kernel breaks a driver hash, not just
-    * DriftGateSpec. The streaming side (foreachBatch wiring, empty-
-    * batch suppression, per-batch artifact refresh) stays covered by
-    * the parity specs — DuckDB cannot run a stream, the r18
-    * disclosure.
+  /** PSI report of one (vec_id, embedding) slice against the corpus.
+    * Reference = the maintained fitted-cell index's occupancy; current
+    * = `batch` assigned under the SAME frozen fitted quantizer
+    * ([[SimilarityIvf.ivfAssign]]), so both histograms share one cell
+    * geometry. Cells empty on one side survive the full join (smoothed
+    * by [[psiReport]]), so a batch concentrated in a single cell reads
+    * as the drift it is. */
+  private[graft] def driftReport(batch: DataFrame, spark: SparkSession, dir: String)
+      : DataFrame = {
+    val cents = SimilarityIvf.fitCentroids(spark, dir)
+    val ref = SimilarityIvf.ivfCells(spark, dir, cents, s"ivfCellsFit|$dir")
+      .groupBy("cell").agg(count(lit(1)).as("n_ref"))
+    val cur = SimilarityIvf.ivfAssign(Similarity.embBaseOf(batch), cents)
+      .groupBy("cell").agg(count(lit(1)).as("n_cur"))
+    val cnt = ref.join(cur, Seq("cell"), "full")
+      .select(col("cell"),
+        coalesce(col("n_ref"), lit(0L)).as("n_ref"),
+        coalesce(col("n_cur"), lit(0L)).as("n_cur"))
+    psiReport(cnt, cents.length)
+  }
+
+  /** Batch-vs-corpus drift head (`q_stream_parity_drift`). Scores a
+    * FIXED batch (the even vec_ids) with [[driftReport]] and reduces
+    * the K-cell report to one checksum row, so a drifted kernel breaks
+    * an oracle hash.
     *
     * Checksum discipline: the histogram checksum is BIGINT-exact
     * (cells ≤ K = a few thousand, so the weighted sum is far inside
@@ -547,7 +556,7 @@ object EmbeddingOps {
   def streamParityDrift(spark: SparkSession, dir: String): DataFrame = {
     val batch = Tables.embeddings(spark, dir)
       .filter(pmod(col("vec_id"), lit(2)) === 0)
-    graft.streaming.DriftGate.driftReport(batch, spark, dir)
+    driftReport(batch, spark, dir)
       .agg(
         count(lit(1)).cast("long").as("n_cells"),
         sum(col("n_ref")).cast("long").as("t_ref"),

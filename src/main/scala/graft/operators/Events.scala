@@ -6,9 +6,7 @@ import graft.QueryModule
 import graft.sources.Tables
 
 /** Event-time analytics over the `events` table (SURVEY.md §2.10/E6) in
-  * batch form — the same aggregations graft.streaming.EventStreams runs
-  * incrementally with watermarks; batch/stream parity is pinned by
-  * EventStreamsSpec. The reference's only temporal construct is the
+  * batch form. The reference's only temporal construct is the
   * coarse last-run-date watermark (`flows/main_flow.py:114,129-134`);
   * these queries are the engine's event-time surface.
   *
@@ -244,22 +242,15 @@ object Events {
       .orderBy("user_id", "day")
   }
 
-  /** Batch twin of the stream-stream interval join
-    * (EventStreams.errorClickJoin): every error event paired with the
-    * SAME USER's click events in the preceding hour — impressions⋈
-    * clicks shape. The stream side buffers both watermarked sides and
-    * expires state through the interval bound; this twin states the
-    * identical join over the batch table, so the driver's DuckDB
-    * oracle pins the stream's semantics end to end
-    * (EventStreamsSpec pins stream ≡ THIS on out-of-order arrivals).
+  /** Interval join: every error event paired with the SAME USER's
+    * click events in the preceding hour — impressions⋈clicks shape.
     * Plan shape at scale: equi-join on user_id (hash-partitioned both
     * sides) with the interval condition as a cheap post-join filter —
     * no cartesian anywhere. */
   def errorClickPairs(spark: SparkSession, dir: String): DataFrame =
     errorClickPairsOf(Tables.events(spark, dir))
 
-  /** Core over an arbitrary events slice — shared with the streaming
-    * parity spec so both sides see identical rows. */
+  /** Core over an arbitrary events slice. */
   private[graft] def errorClickPairsOf(ev: DataFrame): DataFrame = {
     val errors = ev.filter(col("event_type") === "error")
       .select(col("event_id").as("error_id"), col("user_id"),
@@ -276,16 +267,12 @@ object Events {
       .orderBy("error_id", "click_id")
   }
 
-  /** Batch twin of the LEFT OUTER stream-stream interval join
-    * (EventStreams.errorClickJoinOuter): every error event paired with
-    * the same user's clicks in the preceding hour — PLUS one
-    * null-click row for every error with NO click in the horizon (the
-    * unmatched-error half the inner join drops: "errors with no
-    * preceding interaction" is the question an incident pipeline
-    * actually asks). On the stream side the null row can only emit
-    * once the click watermark has passed the error's horizon (the
-    * match could still arrive until then) — EventStreamsSpec pins
-    * exactly that emission timing against THIS twin. Plan shape at
+  /** LEFT OUTER interval join: every error event paired with the same
+    * user's clicks in the preceding hour — PLUS one null-click row for
+    * every error with NO click in the horizon (the unmatched-error
+    * half the inner join drops: "errors with no preceding
+    * interaction" is the question an incident pipeline actually
+    * asks). Plan shape at
     * scale: same user-keyed equi-join as the inner twin (the interval
     * bound a post-join filter); the null-extension adds no extra
     * shuffle. Ordering pins null click ids FIRST in both engines
@@ -404,18 +391,12 @@ object Events {
 object EventsModule extends QueryModule {
   import Events._
 
-  /** Streaming-parity audit head — the registered BATCH side of the
-    * stream/batch parity pairs the streaming specs pin. Each streaming
-    * head (stateful funnel, EWMA gate, ingest dedup-within-watermark)
-    * is spec-pinned equal to a batch twin on two-batch replays; this
-    * query replays a FIXED two-batch window (the corpus's first two
-    * calendar days of events = batch 1 + batch 2; the even/odd doc_id
-    * split for the ingest head's stream-vs-corpus join) through those
-    * batch twins and reduces each to one summary row, so the batch
-    * side of every parity pair sits under the driver gate — a drifted
-    * twin now breaks this hash, not just a spec. The streaming side
-    * stays covered by EventStreamsSpec/IngestDedupSpec (DuckDB cannot
-    * run a stream — the r18 disclosure).
+  /** Fixed-window audit head (`q_stream_parity_batch`): replays a
+    * FIXED two-day window (the corpus's first two calendar days of
+    * events) through the funnel and EWMA kernels, and an even/odd
+    * doc_id split through an exact-dedup-against-corpus join, and
+    * reduces each to one summary row, so a drifted kernel breaks
+    * this hash.
     *
     * All checksums are BIGINT-exact (counts, step-weighted user
     * counts, rank-window sizes, epoch-millis, id sums) — no float ever
@@ -436,10 +417,9 @@ object EventsModule extends QueryModule {
         (sum(col("n_window")) + sum(unix_millis(col("last_ts")))).as("chk"))
       .select(lit("ewma").as("head"), col("n_rows"),
         col("chk").cast("long").as("chk"))
-    // ingest-dedup twin: even doc_ids replay as the "stream" (first
-    // seen per fingerprint = min doc_id — dropDuplicatesWithinWatermark
-    // under the deterministic doc_id arrival order), odd doc_ids stand
-    // in as the standing corpus for the in_corpus stream-static join
+    // ingest dedup: even doc_ids are the incoming batch (first seen
+    // per fingerprint = min doc_id), odd doc_ids stand in as the
+    // standing corpus for the in_corpus join
     val docs = Tables.documents(spark, dir)
       .select(col("doc_id"), md5(Dedup.normText(col("text"))).as("fp"))
     val corpus = docs.filter(col("doc_id") % 2 === 1).select(col("fp")).distinct()

@@ -369,8 +369,8 @@ object Reindex {
 
 /** Side report for the online-serving heads: what the advice marker
   * said the last time each index directory served. The serving heads
-  * (Similarity.annServeBatch* and the streaming AnnServe twins riding
-  * them) consult [[Reindex.readAdvice]] per call and record here —
+  * (Similarity.annServeBatch*) consult [[Reindex.readAdvice]] per call
+  * and record here —
   * results are unchanged, but a deployment serving on an index its own
   * monitor has flagged stale gets a loud log line plus a queryable
   * flag instead of silently degraded recall. */

@@ -390,8 +390,7 @@ object Similarity {
     * the corpus crossed a sizing boundary since the build, the batch
     * would be bucketed under a different plane count than the persisted
     * rows (mixed-length bucket strings that never collide). Appends
-    * must read the geometry from the artifact itself, exactly as
-    * IngestDedup's stream-side probe does on its static side. */
+    * must read the geometry from the artifact itself. */
   private[graft] def artifactH(spark: SparkSession, indexDir: String): Option[Int] = {
     val p = new org.apache.hadoop.fs.Path(s"$indexDir/lshBuckets.parquet")
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -464,13 +463,12 @@ object Similarity {
   /** All T bucket strings of a vector column — ONE fused native
     * expression (LshBucketStrings: the vector copied to a local
     * double[] once, then a single T×H×dim codegen loop) over the
-    * seeded hyperplane constants, shared by the batch index build and
-    * the streaming ingest probe (a stream cannot checkpoint projection
-    * stages, and byte-identical bucket strings are what make a
-    * stream-side probe hit the persisted corpus index — the caller
-    * passes the CORPUS ARTIFACT's plane count, never a recomputed
-    * one). The fused kernel replaced the composed T×H dot-expression
-    * tree in round 15: same bits (LshGeometrySpec pins the parity),
+    * seeded hyperplane constants, shared by the index build, the
+    * append path and the query side of the serving heads
+    * (byte-identical bucket strings are what make a probe hit the
+    * persisted corpus index — the caller passes the CORPUS ARTIFACT's
+    * plane count, never a recomputed one). The fused kernel replaced
+    * the composed T×H dot-expression tree in round 15: same bits (LshGeometrySpec pins the parity),
     * ~an order of magnitude less expression overhead on the one-time
     * bucket build (PLANS.md §16). */
   private[graft] def bucketStrings(v: Column, h: Int = NumPlanes): Column =
@@ -1385,19 +1383,6 @@ object SimilarityIvf {
         out
       }
     }
-  }
-
-  /** The argmax-cell assignment of a vector column as ONE expression
-    * tree — shared with the streaming semantic ingest probe (a stream
-    * cannot checkpoint staging projections, and a byte-identical
-    * assignment expression is what makes a stream probe land in the
-    * same cells as the persisted index). The dot array is evaluated
-    * twice after CollapseProject inlining — acceptable for batch-sized
-    * stream inputs, the ivfAssign argument. */
-  private[graft] def cellExpr(v: Column,
-                              cents: Seq[Seq[Double]] = centroids): Column = {
-    val dots = centroidDots(v, cents)
-    array_position(dots, array_max(dots)).cast("int")
   }
 
   /** Row-wise IVF cell assignment over an arbitrary (vec_id, v, …)

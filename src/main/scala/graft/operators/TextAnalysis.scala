@@ -227,10 +227,9 @@ object TextAnalysis {
 
   /** Per-doc NB score sums of an arbitrary (doc_id, toks) slice
     * against a model table — the serving kernel shared by the corpus
-    * score query and the streaming ingest quality gate (identical
-    * arithmetic is the stream≡batch parity contract). Returns
-    * (doc_id, sdec); docs with no in-vocab terms are absent (callers
-    * left-join and coalesce to the prior). */
+    * score query and [[scoreBatch]] (identical arithmetic on both).
+    * Returns (doc_id, sdec); docs with no in-vocab terms are absent
+    * (callers left-join and coalesce to the prior). */
   private[graft] def nbScoreSums(toks: DataFrame, model: DataFrame): DataFrame = {
     // the vocabulary join: model is vocab-sized (tiny next to the
     // exploded corpus) — AQE broadcasts it, same shape as tf-idf's df
@@ -297,19 +296,29 @@ object TextAnalysis {
       .groupBy("teacher", "nb_pred").agg(count(lit(1)).as("n_docs"))
       .orderBy("teacher", "nb_pred")
 
-  /** Streaming quality-gate parity head — the registered BATCH side
-    * of the [[graft.streaming.QualityGate]] parity pair (closing the
-    * r18 "streaming heads have no driver-visible entries" gap for
-    * this head; funnel/EWMA/ingest-dedup are q_stream_parity_batch,
-    * drift is q_stream_parity_drift). Replays a FIXED ingest batch —
-    * the even doc_ids, the corpus split the ingest-dedup head
-    * established — through [[graft.streaming.QualityGate.scoreBatch]]
-    * verbatim (left-join score preservation of no-vocab docs, prior
-    * broadcast, the strict `score > 0` admission threshold) against
-    * the fitted model, and reduces to one checksum row, so a drifted
-    * batch kernel breaks a driver hash, not just QualityGateSpec. The
-    * streaming side (foreachBatch wiring, per-batch model refresh)
-    * stays covered by the parity spec — DuckDB cannot run a stream.
+  /** Score one (doc_id, text, …) slice against a model table with the
+    * `q_quality_nb` kernel: same tokenizer ([[Curation.toks]]), same
+    * [[nbScoreSums]]/[[nbScoreExpr]] DECIMAL discipline. Every column
+    * of `docs` is kept and nb_score / nb_pred are added; a doc with no
+    * in-vocabulary term keeps its row (left join) and scores the
+    * prior. */
+  private[graft] def scoreBatch(docs: DataFrame, model: DataFrame): DataFrame = {
+    val toks = docs.select(col("doc_id"), Curation.toks(col("text")).as("toks"))
+    val sums = nbScoreSums(toks, model)
+    val score = nbScoreExpr
+    docs.join(sums, Seq("doc_id"), "left")
+      .crossJoin(broadcast(nbPrior(model)))
+      .withColumn("nb_score", score)
+      .withColumn("nb_pred", when(score > 0, "pass").otherwise("reject"))
+      .drop("sdec", "prior_dec")
+  }
+
+  /** Batch quality-gate head (`q_stream_parity_quality`). Scores a
+    * FIXED batch (the even doc_ids) with [[scoreBatch]] (left-join
+    * score preservation of no-vocab docs, prior broadcast, the strict
+    * `score > 0` admission threshold) against the fitted model and
+    * reduces to one checksum row, so a drifted kernel breaks an oracle
+    * hash.
     *
     * Checksum discipline: nb_score is round(DECIMAL, 6) cast double,
     * i.e. every score IS k/10⁶ for integer k — round(score·10⁶)
@@ -321,7 +330,7 @@ object TextAnalysis {
   def streamParityQuality(spark: SparkSession, dir: String): DataFrame = {
     val batch = Tables.documents(spark, dir)
       .filter(pmod(col("doc_id"), lit(2)) === 0)
-    graft.streaming.QualityGate.scoreBatch(batch, nbQualityModel(spark, dir))
+    scoreBatch(batch, nbQualityModel(spark, dir))
       .agg(
         count(lit(1)).cast("long").as("n_rows"),
         sum(when(col("nb_pred") === "pass", 1L).otherwise(0L))
@@ -1146,10 +1155,10 @@ object TextAnalysisModule extends QueryModule {
         |  teacher,
         |  (nb_score > 0) = (teacher = 'pass') AS agree
         |FROM scored ORDER BY doc_id""".stripMargin,
-    // the streaming quality gate's batch twin: the q_quality_nb score
-    // algebra over the even-doc_id ingest slice (model/prior still
-    // fitted on the FULL corpus — the stream scores against the
-    // maintained artifact, not against itself), reduced to the BIGINT
+    // the batch quality gate: the q_quality_nb score algebra over the
+    // even-doc_id slice (model/prior still fitted on the FULL corpus —
+    // the batch scores against the maintained artifact, not against
+    // itself), reduced to the BIGINT
     // checksum row (see streamParityQuality's precision notes)
     "q_stream_parity_quality" ->
       s"""$nbModelCtes,

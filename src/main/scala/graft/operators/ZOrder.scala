@@ -48,7 +48,7 @@ import graft.sources.Tables
   *
   * Scale posture: two 1-row aggregates (broadcast extents + broadcast
   * total), one distributed window partitioned on the z-block, and one
-  * tiny unpartitioned prefix window over ≤[[ZBlocks]] block-total
+  * tiny unpartitioned prefix window over ≤4096 block-total
   * rows — NO full-table single-partition stage anywhere (the pre-r18
   * plan's unpartitioned NTILE pushed every row through one task; the
   * blockCumsum discipline replaces it, PlanSpec-pinned). The z-code
@@ -67,7 +67,6 @@ object ZOrder {
     * the block-total prefix window stays a few-thousand-row job no
     * matter the corpus size. */
   val ZBlockShift = 20
-  val ZBlocks: Long = 1L << (2 * Bits - ZBlockShift)
 
   /** Integer min-max quantizer to [0, 2^16): exact in both engines. */
   private def quant(v: String, vMin: String, vMax: String): String =

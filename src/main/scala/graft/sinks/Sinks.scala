@@ -178,47 +178,4 @@ object Sinks {
     idx.zipWithIndex.foreach { case (fi, pi) =>
       ps.setObject(pi + 1, r.get(fi))
     }
-
-  /** Exactly-once-in-effect wrapper for any idempotent batch sink
-    * under `foreachBatch` — the batchId-keyed commit discipline
-    * Dedup.appendIndexes uses for index growth, extended to the
-    * object-store and JDBC sinks (SURVEY.md §7.4: Spark streaming
-    * sinks are at-least-once on retry/restart; the checkpoint replays
-    * the LAST uncommitted micro-batch with the SAME batchId).
-    *
-    * Contract:
-    *  - a batchId with a published commit marker is SKIPPED entirely —
-    *    a replay of a completed batch (post-crash restart, speculative
-    *    re-fire) causes zero sink I/O;
-    *  - an uncommitted batchId runs `write` fully, then publishes
-    *    `batch-<id>` via create-temp + atomic rename — a crash
-    *    MID-WRITE leaves no marker, so the restarted query re-runs the
-    *    batch; `write` must therefore be idempotent per row (object
-    *    overwrite by key, ON CONFLICT upsert — which both sinks here
-    *    are), and the pair composes to exactly-once EFFECTS.
-    *
-    * `markerDir` lives next to the sink target so the marker and the
-    * data share a consistency domain. The marker is EMPTY and is
-    * published by a DIRECT create, not create-temp + rename: an empty
-    * file is present or absent, never partial, so the create is the
-    * atomic publish on every filesystem — including object stores
-    * (s3a), where rename is a non-atomic COPY+DELETE and a
-    * rename-based publish would be the one step of this sink that
-    * silently weakened off HDFS. Two CONCURRENT publishers of the same
-    * batchId could still both pass the exists-check and both run
-    * `write` — acceptable under this contract because `write` is
-    * required idempotent, and Structured Streaming never runs one
-    * batchId concurrently with itself anyway. */
-  def exactlyOnceBatch(markerDir: String)(write: (DataFrame, Long) => Unit)
-      : (DataFrame, Long) => Unit = { (batch: DataFrame, batchId: Long) =>
-    val base = new Path(markerDir)
-    val fs = base.getFileSystem(batch.sparkSession.sessionState.newHadoopConf())
-    val marker = new Path(base, s"batch-$batchId")
-    if (!fs.exists(marker)) {
-      write(batch, batchId)
-      fs.mkdirs(base)
-      val out = fs.create(marker, true)
-      try out.write(Array.emptyByteArray) finally out.close()
-    }
-  }
 }

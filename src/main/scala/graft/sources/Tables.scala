@@ -13,10 +13,6 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * partitions from the pushed filters. Nothing here materializes rows.
   */
 object Tables {
-  val all: Seq[String] = Seq(
-    "region", "nation", "customer", "supplier", "part",
-    "orders", "lineitem", "events", "documents", "embeddings")
-
   /** Session-memoized loads, keyed to the table's file GENERATION
     * (name:len:mtime of the data files — the index-artifact
     * fingerprint discipline). `spark.read.parquet` pays DataSource
@@ -130,18 +126,4 @@ object Tables {
   }
   def documents(spark: SparkSession, d: String): DataFrame = load(spark, d, "documents")
   def embeddings(spark: SparkSession, d: String): DataFrame = load(spark, d, "embeddings")
-
-  /** The raw on-disk type of an events directory's `ts` column —
-    * LongType (nanos-as-long), TimestampNTZType, or TimestampType —
-    * i.e. the same dispatch `events` makes per-read, exposed so the
-    * STREAMING twin (whose file-stream source must declare its schema
-    * up front) can make it once at stream definition. */
-  def rawEventsTsType(spark: SparkSession, path: String): org.apache.spark.sql.types.DataType = {
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    spark.read.parquet(path).schema("ts").dataType
-  }
-
-  /** Back-compat boolean view of [[rawEventsTsType]]. */
-  def rawEventsTsIsLong(spark: SparkSession, path: String): Boolean =
-    rawEventsTsType(spark, path) == org.apache.spark.sql.types.LongType
 }

@@ -17,9 +17,7 @@ import graft.sinks.LocalFiles
   * SURVEY.md §7.4).
   *
   * Backed by one small object on any Hadoop filesystem so a cluster of
-  * drivers shares it (file://, hdfs://, s3a://). Structured Streaming
-  * replaces this entirely with checkpointed offsets
-  * (graft.streaming.EventStreams); this is the batch-mode bridge.
+  * drivers shares it (file://, hdfs://, s3a://).
   */
 object WatermarkStore {
 

@@ -182,9 +182,6 @@ class SinksSpec extends SparkSpec {
       Sinks.writeObjectPerRow(Seq(("a.json", "{}"), ("sub/b.json", "[]")).toDF("s3_key", "payload"),
         "s3_key", "payload", out)
       assert(listing(dir) == Map("a.json" -> "{}", "sub/b.json" -> "[]"))
-      val land = Sinks.exactlyOnceBatch(s"$out/markers") { (_, _) => () }
-      land(Seq(1).toDF("x"), 3L)
-      assert(java.nio.file.Files.exists(dir.resolve("markers/batch-3")))
     } finally settings.keys.foreach(spark.conf.unset)
   }
 
@@ -283,28 +280,5 @@ class SinksSpec extends SparkSpec {
     assert(calls.count(_ == "commit") == 1)   // one txn for the whole small batch
     assert(calls.last == "close")
     assert(Sinks.transcriptUpsertSpec.insertSql.contains("ON CONFLICT"))
-  }
-
-  test("JDBC upsert under exactlyOnceBatch: committed batchId issues zero JDBC calls") {
-    val runId = "eo-jdbc-test"
-    val markerDir = java.nio.file.Files.createTempDirectory("graft-eo-jdbc").toString
-    val df = Seq((1L, "t one", "u/1.json"))
-      .toDF("representation_id", "transcript", "transcript_url").coalesce(1)
-    val land = Sinks.exactlyOnceBatch(markerDir) { (batch, _) =>
-      Sinks.jdbcUpsert(batch, Sinks.transcriptUpsertSpec,
-        () => JdbcRecorder.connection(runId))
-    }
-    land(df, 7L)
-    val afterFirst = JdbcRecorder.calls(runId).size
-    assert(afterFirst > 0 && new java.io.File(s"$markerDir/batch-7").exists())
-    // at-least-once redelivery of the SAME batch id: the marker short-
-    // circuits before any connection is opened — exactly-once effects
-    // on a sink whose writes are merely idempotent
-    land(df, 7L)
-    assert(JdbcRecorder.calls(runId).size == afterFirst,
-      "a committed batchId must not touch the database again")
-    // a NEW batch id writes normally
-    land(df, 8L)
-    assert(JdbcRecorder.calls(runId).size > afterFirst)
   }
 }

@@ -1,24 +1,18 @@
 package graft.streaming
 
-import java.sql.Timestamp
-
 import graft.SparkSpec
 import graft.operators.Similarity
-import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-import org.apache.spark.sql.streaming.StreamingQuery
 
-/** Streaming ANN serving parity: streamed top-k ≡ the batch kernel on
-  * the same query vectors; a corpus-identical query finds itself at
-  * cosine 1; zero-norm queries are dropped, not crashed. */
-case class QVec(ts: Timestamp, query_id: Long, embedding: Seq[Float])
+/** ANN serving replayed over micro-batches: streamed top-k ≡ the batch
+  * kernel on the same query vectors, for the LSH, IVF and IVF+PQ
+  * families; a corpus-identical query finds itself at cosine 1;
+  * zero-norm queries are dropped, not crashed. */
+case class QVec(query_id: Long, embedding: Seq[Float])
 
 class AnnServeSpec extends SparkSpec {
   import spark.implicits._
 
-  private def ts(s: String) = Timestamp.valueOf(s)
-
-  private def withQuery[T](q: StreamingQuery)(body: => T): T =
-    try body finally q.stop()
+  private type Served = (Long, Long, Double, Int)
 
   private lazy val corpusDir: String = {
     val dir = java.nio.file.Files.createTempDirectory("graft-annserve").toString
@@ -29,31 +23,47 @@ class AnnServeSpec extends SparkSpec {
     dir
   }
 
+  private def vectors(dir: String): Map[Long, Seq[Float]] =
+    spark.read.parquet(s"$dir/embeddings.parquet")
+      .select("vec_id", "embedding").as[(Long, Seq[Float])].collect().toMap
+
+  /** The served rows of `kernel`, once replayed over a stream and once
+    * called on the same rows as a static batch. */
+  private def serveBoth(queryRows: Seq[QVec])(kernel: org.apache.spark.sql.DataFrame =>
+      org.apache.spark.sql.DataFrame): (Set[Served], Set[Served]) = {
+    def tuple(r: org.apache.spark.sql.Row): Served = (r.getLong(0), r.getLong(1), r.getDouble(2), r.getInt(3))
+    val streamed = MicroBatchReplay(spark, queryRows)(b => kernel(b.select("query_id", "embedding")))
+    (streamed.map(tuple).toSet, kernel(queryRows.toDF()).collect().map(tuple).toSet)
+  }
+
+  /** Probing only selects, never scores: every served cosine must
+    * equal the brute-force cosine for that (query, neighbor) pair,
+    * computed independently here from the raw vectors. */
+  private def assertExactCosines(served: Set[Served], queries: Seq[QVec],
+      corpus: Map[Long, Seq[Float]]): Unit = {
+    val queryVecs = queries.map(q => q.query_id -> q.embedding).toMap
+    def cosine(a: Seq[Float], b: Seq[Float]): Double = {
+      val dot = a.zip(b).map { case (x, y) => x.toDouble * y.toDouble }.sum
+      val na = math.sqrt(a.map(x => x.toDouble * x.toDouble).sum)
+      val nb = math.sqrt(b.map(x => x.toDouble * x.toDouble).sum)
+      dot / (na * nb)
+    }
+    served.foreach { case (qid, nid, cos, _) =>
+      val want = math.rint(cosine(queryVecs(qid), corpus(nid)) * 1e6) / 1e6
+      assert(math.abs(want - cos) <= 1e-6,
+        s"served cos diverged for ($qid,$nid): $want vs $cos")
+    }
+  }
+
   test("streamed top-k equals the batch kernel; corpus-identical query self-matches at cos 1") {
-    implicit val sq = spark.sqlContext
-    val corpusVec7 = spark.read.parquet(s"$corpusDir/embeddings.parquet")
-      .filter("vec_id = 7").select("embedding").as[Seq[Float]].collect()(0)
     val rnd = new scala.util.Random(99)
-    val novel = Seq.fill(16)(rnd.nextGaussian().toFloat)
     val queryRows = Seq(
-      QVec(ts("2024-01-01 10:00:00"), 1001L, corpusVec7),
-      QVec(ts("2024-01-01 10:00:01"), 1002L, novel),
-      QVec(ts("2024-01-01 10:00:02"), 1003L, Seq.fill(16)(0f))) // zero-norm
-    val batchExpected = Similarity.annServeBatch(spark, corpusDir,
-        queryRows.toDF().select("query_id", "embedding"), k = 3, radius = 2)
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2), r.getInt(3))).toSet
-    val collected = scala.collection.mutable.Set.empty[(Long, Long, Double, Int)]
-    val input = MemoryStream[QVec]
-    val q = AnnServe.annServeIngest(input.toDF(), spark, corpusDir,
-      k = 3, radius = 2) { served =>
-      collected ++= served.collect()
-        .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2), r.getInt(3)))
-    }
-    withQuery(q) {
-      input.addData(queryRows: _*)
-      q.processAllAvailable()
-    }
-    assert(collected.toSet === batchExpected, "stream/batch divergence")
+      QVec(1001L, vectors(corpusDir)(7L)),
+      QVec(1002L, Seq.fill(16)(rnd.nextGaussian().toFloat)),
+      QVec(1003L, Seq.fill(16)(0f))) // zero-norm
+    val (collected, batchExpected) = serveBoth(queryRows)(
+      Similarity.annServeBatch(spark, corpusDir, _, k = 3, radius = 2))
+    assert(collected === batchExpected, "stream/batch divergence")
     // the corpus-identical query finds vec 7 as its top neighbor, cos 1
     val top1001 = collected.filter(t => t._1 == 1001L && t._4 == 1)
     assert(top1001.map(t => (t._2, t._3)) === Set((7L, 1.0)),
@@ -65,29 +75,15 @@ class AnnServeSpec extends SparkSpec {
   }
 
   test("IVF serving twin: stream equals batch, self-match at cos 1, exact agreement on served pairs") {
-    implicit val sq = spark.sqlContext
-    val corpusVec7 = spark.read.parquet(s"$corpusDir/embeddings.parquet")
-      .filter("vec_id = 7").select("embedding").as[Seq[Float]].collect()(0)
+    val corpus = vectors(corpusDir)
     val rnd = new scala.util.Random(42)
-    val novel = Seq.fill(16)(rnd.nextGaussian().toFloat)
     val queryRows = Seq(
-      QVec(ts("2024-01-01 10:00:00"), 2001L, corpusVec7),
-      QVec(ts("2024-01-01 10:00:01"), 2002L, novel),
-      QVec(ts("2024-01-01 10:00:02"), 2003L, Seq.fill(16)(0f))) // zero-norm
-    val batchExpected = Similarity.annServeBatchIvf(spark, corpusDir,
-        queryRows.toDF().select("query_id", "embedding"), k = 3)
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2), r.getInt(3))).toSet
-    val collected = scala.collection.mutable.Set.empty[(Long, Long, Double, Int)]
-    val input = MemoryStream[QVec]
-    val q = AnnServe.annServeIngestIvf(input.toDF(), spark, corpusDir, k = 3) { served =>
-      collected ++= served.collect()
-        .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2), r.getInt(3)))
-    }
-    withQuery(q) {
-      input.addData(queryRows: _*)
-      q.processAllAvailable()
-    }
-    assert(collected.toSet === batchExpected, "IVF stream/batch divergence")
+      QVec(2001L, corpus(7L)),
+      QVec(2002L, Seq.fill(16)(rnd.nextGaussian().toFloat)),
+      QVec(2003L, Seq.fill(16)(0f))) // zero-norm
+    val (collected, batchExpected) = serveBoth(queryRows)(
+      Similarity.annServeBatchIvf(spark, corpusDir, _, k = 3))
+    assert(collected === batchExpected, "IVF stream/batch divergence")
     // corpus-identical query: its own cell is always the nearest probe,
     // so vec 7 MUST be found, at cosine exactly 1
     val top2001 = collected.filter(t => t._1 == 2001L && t._4 == 1)
@@ -95,53 +91,23 @@ class AnnServeSpec extends SparkSpec {
       s"IVF self-match failed: $top2001")
     assert(collected.exists(_._1 == 2002L), s"novel query unanswered: $collected")
     assert(!collected.exists(_._1 == 2003L))
-    // probing only selects — never scores: every served cosine must
-    // equal the brute-force cosine for that (query, neighbor) pair,
-    // computed independently here from the raw parquet
-    val corpusVecs = spark.read.parquet(s"$corpusDir/embeddings.parquet")
-      .select("vec_id", "embedding").as[(Long, Seq[Float])].collect().toMap
-    val queryVecs = queryRows.map(q => q.query_id -> q.embedding).toMap
-    def cosine(a: Seq[Float], b: Seq[Float]): Double = {
-      val dot = a.zip(b).map { case (x, y) => x.toDouble * y.toDouble }.sum
-      val na = math.sqrt(a.map(x => x.toDouble * x.toDouble).sum)
-      val nb = math.sqrt(b.map(x => x.toDouble * x.toDouble).sum)
-      dot / (na * nb)
-    }
-    collected.foreach { case (qid, nid, cos, _) =>
-      val want = math.rint(cosine(queryVecs(qid), corpusVecs(nid)) * 1e6) / 1e6
-      assert(math.abs(want - cos) <= 1e-6,
-        s"served cos diverged for ($qid,$nid): $want vs $cos")
-    }
+    assertExactCosines(collected, queryRows, corpus)
   }
 
   test("IVF+PQ serving twin: compressed shortlist selects, exact rerank scores — stream equals batch") {
     // The third serving family runs on the REAL 64-dim corpus (PQ's
     // 8×8 subspace split assumes dim 64); the tiny 16-dim fixture
     // above would encode only the first two subspaces.
-    implicit val sq = spark.sqlContext
     val dir = sf("sf0.001")
-    val corpusVec7 = spark.read.parquet(s"$dir/embeddings.parquet")
-      .filter("vec_id = 7").select("embedding").as[Seq[Float]].collect()(0)
+    val corpus = vectors(dir)
     val rnd = new scala.util.Random(7)
-    val novel = Seq.fill(64)(rnd.nextGaussian().toFloat)
     val queryRows = Seq(
-      QVec(ts("2024-01-01 10:00:00"), 3001L, corpusVec7),
-      QVec(ts("2024-01-01 10:00:01"), 3002L, novel),
-      QVec(ts("2024-01-01 10:00:02"), 3003L, Seq.fill(64)(0f))) // zero-norm
-    val batchExpected = Similarity.annServeBatchIvfPq(spark, dir,
-        queryRows.toDF().select("query_id", "embedding"), k = 3)
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2), r.getInt(3))).toSet
-    val collected = scala.collection.mutable.Set.empty[(Long, Long, Double, Int)]
-    val input = MemoryStream[QVec]
-    val q = AnnServe.annServeIngestIvfPq(input.toDF(), spark, dir, k = 3) { served =>
-      collected ++= served.collect()
-        .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2), r.getInt(3)))
-    }
-    withQuery(q) {
-      input.addData(queryRows: _*)
-      q.processAllAvailable()
-    }
-    assert(collected.toSet === batchExpected, "IVF+PQ stream/batch divergence")
+      QVec(3001L, corpus(7L)),
+      QVec(3002L, Seq.fill(64)(rnd.nextGaussian().toFloat)),
+      QVec(3003L, Seq.fill(64)(0f))) // zero-norm
+    val (collected, batchExpected) = serveBoth(queryRows)(
+      Similarity.annServeBatchIvfPq(spark, dir, _, k = 3))
+    assert(collected === batchExpected, "IVF+PQ stream/batch divergence")
     // corpus-identical query: own cell always probed, the ADC shortlist
     // (tuned, >= 32 of ~500) comfortably keeps the identical vector,
     // and the exact rerank must then surface it at cosine exactly 1
@@ -150,109 +116,7 @@ class AnnServeSpec extends SparkSpec {
       s"IVF+PQ self-match failed: $top3001")
     assert(collected.exists(_._1 == 3002L), s"novel query unanswered: $collected")
     assert(!collected.exists(_._1 == 3003L))
-    // the compressed domain only SELECTS — served scores are exact
-    // cosines, verified independently from the raw parquet
-    val corpusVecs = spark.read.parquet(s"$dir/embeddings.parquet")
-      .select("vec_id", "embedding").as[(Long, Seq[Float])].collect().toMap
-    val queryVecs = queryRows.map(q => q.query_id -> q.embedding).toMap
-    def cosine(a: Seq[Float], b: Seq[Float]): Double = {
-      val dot = a.zip(b).map { case (x, y) => x.toDouble * y.toDouble }.sum
-      val na = math.sqrt(a.map(x => x.toDouble * x.toDouble).sum)
-      val nb = math.sqrt(b.map(x => x.toDouble * x.toDouble).sum)
-      dot / (na * nb)
-    }
-    collected.foreach { case (qid, nid, cos, _) =>
-      val want = math.rint(cosine(queryVecs(qid), corpusVecs(nid)) * 1e6) / 1e6
-      assert(math.abs(want - cos) <= 1e-6,
-        s"served cos diverged for ($qid,$nid): $want vs $cos")
-    }
-  }
-
-  test("corpus refresh between micro-batches: a newly ingested vector is served on the next batch") {
-    implicit val sq = spark.sqlContext
-    // private corpus dir — this test appends to it
-    val dir = java.nio.file.Files.createTempDirectory("graft-annserve-refresh").toString
-    val rnd = new scala.util.Random(23)
-    (0 until 40).map(i => (i.toLong, Seq.fill(16)(rnd.nextGaussian().toFloat), i % 4))
-      .toDF("vec_id", "embedding", "label")
-      .write.mode("overwrite").parquet(s"$dir/embeddings.parquet")
-    val probe = Seq.fill(16)(rnd.nextGaussian().toFloat)
-    // per-batch result snapshots, in arrival order
-    val batches = scala.collection.mutable.ArrayBuffer.empty[Set[(Long, Long, Double, Int)]]
-    val input = MemoryStream[QVec]
-    val q = AnnServe.annServeIngest(input.toDF(), spark, dir, k = 3, radius = 2) { served =>
-      batches += served.collect()
-        .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2), r.getInt(3))).toSet
-    }
-    withQuery(q) {
-      input.addData(QVec(ts("2024-01-01 10:00:00"), 9001L, probe))
-      q.processAllAvailable()
-      // corpus maintenance lands between batches: a new vector equal to
-      // the probe is appended and the session memo entries for the
-      // corpus-derived state are dropped (what index maintenance does);
-      // the SAME running stream must serve it on the next micro-batch —
-      // the refreshable-static-side contract, pinned here end to end
-      Seq((777L, probe, 0)).toDF("vec_id", "embedding", "label")
-        .write.mode("append").parquet(s"$dir/embeddings.parquet")
-      graft.operators.Dedup.memoDrop(spark, s"embBase|$dir")
-      graft.operators.Dedup.memoDrop(spark, s"lshBuckets|$dir")
-      input.addData(QVec(ts("2024-01-01 10:00:01"), 9002L, probe))
-      q.processAllAvailable()
-    }
-    // locate each query's snapshot by content (an engine may hand the
-    // sink an initial empty batch; don't index positionally)
-    val b1 = batches.find(_.exists(_._1 == 9001L))
-      .getOrElse(fail(s"query 9001 unanswered: $batches"))
-    val b2 = batches.find(_.exists(_._1 == 9002L))
-      .getOrElse(fail(s"query 9002 unanswered: $batches"))
-    // batch 1 predates vector 777: it cannot have served it
-    assert(!b1.exists(_._2 == 777L),
-      s"batch 1 served a vector that did not exist yet: $b1")
-    // batch 2 must surface the ingested vector as top-1 at cosine 1
-    val top = b2.filter(t => t._1 == 9002L && t._4 == 1)
-    assert(top.map(t => (t._2, t._3)) === Set((777L, 1.0)),
-      s"refresh not served: $b2")
-  }
-
-  test("streaming serve discloses a stale-flagged index; reindex clears the disclosure") {
-    implicit val sq = spark.sqlContext
-    import graft.operators.{Dedup, Reindex, ServeStatus}
-    val dir = java.nio.file.Files.createTempDirectory("graft-annserve-stale").toString
-    val idx = java.nio.file.Files.createTempDirectory("graft-annserve-stale-idx").toString
-    val rnd = new scala.util.Random(17)
-    Seq((1L, "alpha beta gamma delta", "en", "srcT", 22L))
-      .toDF("doc_id", "text", "lang", "source", "n_chars")
-      .write.mode("overwrite").parquet(s"$dir/documents.parquet")
-    (0 until 40)
-      .map(i => (i.toLong, Seq.fill(64)(rnd.nextGaussian().toFloat), i % 4))
-      .toDF("vec_id", "embedding", "label")
-      .write.mode("overwrite").parquet(s"$dir/embeddings.parquet")
-    Dedup.writeIndexes(spark, dir, idx)
-    // a 32.5% erase of the fitted vectors trips the cumulative ledger
-    // and leaves the advice marker (the real producer, not a test stub)
-    Dedup.eraseDocuments(spark, dir, idx, Nil, vecIds = (0L to 12L))
-    assert(Reindex.readAdvice(spark, idx).exists(_._1 == "erase"))
-    val qv = spark.read.parquet(s"$dir/embeddings.parquet")
-      .filter("vec_id = 20").select("embedding").as[Seq[Float]].collect()(0)
-    def serveOnce(id: Long): Unit = {
-      val input = MemoryStream[QVec]
-      val q = AnnServe.annServeIngest(input.toDF(), spark, dir, k = 3, radius = 1)(_ => ())
-      withQuery(q) {
-        input.addData(QVec(ts("2024-01-01 10:00:00"), id, qv))
-        q.processAllAvailable()
-      }
-    }
-    // online traffic on the flagged index gets the DISCLOSED serve:
-    // results unchanged (parity specs above), staleness recorded
-    serveOnce(8001L)
-    assert(ServeStatus.lastAdvice(idx).exists(_._1 == "erase"),
-      "streamed serve on a flagged index must record the disclosure")
-    // the repair: re-fit the geometry; the next streamed serve is clean
-    Dedup.reindexArtifacts(spark, dir, idx)
-    serveOnce(8002L)
-    assert(ServeStatus.lastAdvice(idx).isEmpty,
-      "post-reindex streamed serve must clear the disclosure")
-    Dedup.releaseIndexes(spark)
-    Similarity.invalidateCorpusH(spark, dir)
+    // the compressed domain only SELECTS — served scores are exact cosines
+    assertExactCosines(collected, queryRows, corpus)
   }
 }

@@ -1,64 +1,45 @@
 package graft.streaming
 
 import graft.SparkSpec
-import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-import org.apache.spark.sql.streaming.StreamingQuery
+import graft.operators.EmbeddingOps
 
-/** Streaming PSI drift gate: assignment parity with the maintained
-  * fitted-cell index (a corpus replayed through the stream must score
-  * PSI exactly 0), and a concentrated batch must trip the gate. */
+/** The PSI drift report ([[EmbeddingOps.driftReport]]) replayed as a
+  * micro-batch gate: assignment parity with the maintained fitted-cell
+  * index (the corpus replayed through the gate must score PSI exactly
+  * 0), and a concentrated batch must trip the gate. */
 class DriftGateSpec extends SparkSpec {
   import spark.implicits._
 
   case class Vec(vec_id: Long, embedding: Seq[Float])
-
-  private def withQuery[T](q: StreamingQuery)(body: => T): T =
-    try body finally q.stop()
 
   private lazy val corpus: Array[Vec] =
     spark.read.parquet(sf("sf0.001") + "/embeddings.parquet")
       .select("vec_id", "embedding").as[(Long, Seq[Float])]
       .collect().map { case (id, v) => Vec(id, v) }
 
+  private def gate(rows: Seq[Vec]): Seq[org.apache.spark.sql.Row] =
+    MicroBatchReplay(spark, rows)(EmbeddingOps.driftReport(_, spark, sf("sf0.001")))
+
   test("replaying the whole corpus through the gate scores PSI exactly 0") {
-    implicit val sq = spark.sqlContext
-    val reports = scala.collection.mutable.ArrayBuffer.empty[(Long, Double)]
-    val input = MemoryStream[Vec]
-    val q = DriftGate.driftGateIngest(input.toDF(), spark, sf("sf0.001")) {
-      (report, id) =>
-        report.select("psi_total").as[Double].collect().foreach(p => reports += id -> p)
-    }
-    withQuery(q) {
-      input.addData(corpus.toSeq)
-      q.processAllAvailable()
-    }
+    val reports = gate(corpus.toSeq).map(_.getAs[Double]("psi_total"))
     assert(reports.nonEmpty)
     // ref = the maintained cell index, cur = the same 500 vectors
-    // assigned on the stream side: any divergence in the frozen-
-    // quantizer assignment would unbalance a cell and PSI ≠ 0
-    assert(reports.forall(_._2 == 0.0),
+    // assigned again: any divergence in the frozen-quantizer
+    // assignment would unbalance a cell and PSI ≠ 0
+    assert(reports.forall(_ == 0.0),
       s"corpus replay must be drift-free, got ${reports.take(3)}")
   }
 
   test("the registered q_stream_parity_drift checksums equal a streamed replay of the same fixed batch") {
-    // same closure as QualityGateSpec's parity test: the driver-gate
-    // head reduces the even-vec_id batch through the BATCH kernel;
-    // streaming the identical slice must reduce to the identical
-    // checksum row
-    implicit val sq = spark.sqlContext
+    // the registered head reduces the even-vec_id batch through the
+    // batch kernel; streaming the identical slice must reduce to the
+    // identical checksum row
     val dir = sf("sf0.001")
     val exp = graft.SparkEntry.queries("q_stream_parity_drift")(spark, dir)
       .collect()(0)
-    val cells = scala.collection.mutable.ArrayBuffer.empty[(Int, Long, Long, Double)]
-    val input = MemoryStream[Vec]
-    val q = DriftGate.driftGateIngest(input.toDF(), spark, dir) { (report, _) =>
-      cells ++= report.select("cell", "n_ref", "n_cur", "psi_contrib")
-        .as[(Int, Long, Long, Double)].collect()
-    }
-    withQuery(q) {
-      input.addData(corpus.filter(_.vec_id % 2 == 0).toSeq)
-      q.processAllAvailable()
-    }
+    val cells = gate(corpus.filter(_.vec_id % 2 == 0).toSeq)
+      .map(r => (r.getAs[Int]("cell"), r.getAs[Long]("n_ref"), r.getAs[Long]("n_cur"),
+        r.getAs[Double]("psi_contrib")))
     assert(cells.size.toLong == exp.getLong(0), "n_cells")
     assert(cells.map(_._2).sum == exp.getLong(1), "t_ref")
     assert(cells.map(_._3).sum == exp.getLong(2), "t_cur")
@@ -68,26 +49,16 @@ class DriftGateSpec extends SparkSpec {
   }
 
   test("a batch concentrated in one region trips the gate; report matches the batch kernel") {
-    implicit val sq = spark.sqlContext
     // 50 near-copies of corpus vector 0 — a crawler stuck on one site
     val stuck = (0 until 50).map(i => Vec(100000L + i, corpus(0).embedding))
-    val collected = scala.collection.mutable.ArrayBuffer.empty[(Int, Long, Long, Double)]
-    val totals = scala.collection.mutable.ArrayBuffer.empty[Double]
-    val input = MemoryStream[Vec]
-    val q = DriftGate.driftGateIngest(input.toDF(), spark, sf("sf0.001")) {
-      (report, _) =>
-        totals ++= report.select("psi_total").as[Double].collect().headOption
-        collected ++= report.select("cell", "n_ref", "n_cur", "psi_contrib")
-          .as[(Int, Long, Long, Double)].collect()
-    }
-    withQuery(q) {
-      input.addData(stuck)
-      q.processAllAvailable()
-    }
-    assert(totals.nonEmpty && totals.head > 0.1,
-      s"concentrated batch PSI ${totals.headOption} should exceed the 0.1 monitor bar")
+    val streamed = gate(stuck)
+    val totals = streamed.map(_.getAs[Double]("psi_total")).distinct
+    assert(totals.size == 1 && totals.head > 0.1,
+      s"concentrated batch PSI $totals should exceed the 0.1 monitor bar")
+    val collected = streamed.map(r => (r.getAs[Int]("cell"), r.getAs[Long]("n_ref"),
+      r.getAs[Long]("n_cur"), r.getAs[Double]("psi_contrib")))
     // byte-parity with the batch kernel on the identical slice
-    val batchReport = DriftGate.driftReport(
+    val batchReport = EmbeddingOps.driftReport(
       stuck.map(v => (v.vec_id, v.embedding)).toDF("vec_id", "embedding"),
       spark, sf("sf0.001"))
       .select("cell", "n_ref", "n_cur", "psi_contrib")

@@ -1,405 +1,17 @@
 package graft.streaming
 
-import java.sql.Timestamp
-
 import graft.SparkSpec
-import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-import org.apache.spark.sql.streaming.StreamingQuery
+import graft.operators.Dedup
+import org.apache.spark.sql.functions.col
 
-/** Two-tier continuous-ingest dedup semantics: within-stream collapse
-  * via watermarked fingerprint state, corpus flagging via the
-  * stream-static join, and stream/batch fingerprint parity. */
+/** Ingest-side MinHash parity: [[Dedup.minhashOfText]], the
+  * one-expression signature the append path computes per arriving
+  * document, must equal the batch signature artifact on arbitrary
+  * text. */
 class IngestDedupSpec extends SparkSpec {
   import spark.implicits._
 
-  case class Doc(ts: Timestamp, doc_id: Long, text: String)
-  case class Vec(ts: Timestamp, vec_id: Long, embedding: Seq[Float])
-  private def ts(s: String) = Timestamp.valueOf(s)
-
-  private def withQuery[T](q: StreamingQuery)(body: => T): T =
-    try body finally q.stop()
-
-  private lazy val corpusDir: String = {
-    val dir = java.nio.file.Files.createTempDirectory("graft-ingest").toString
-    Seq(
-      (1L, "the quick brown fox jumps over the lazy dog"),
-      (2L, "an entirely different corpus document"))
-      .map { case (id, text) => (id, text, "en", "srcT", text.length.toLong) }
-      .toDF("doc_id", "text", "lang", "source", "n_chars")
-      .write.mode("overwrite").parquet(s"$dir/documents.parquet")
-    dir
-  }
-
-  /** Corpus with long documents (enough 3-gram shingles for MinHash to
-    * estimate Jaccard meaningfully) for the near-dup tier. */
-  private lazy val nearDupDir: String = {
-    val dir = java.nio.file.Files.createTempDirectory("graft-ingest-nd").toString
-    val article = "the committee met on tuesday to review the annual budget " +
-      "proposal and after a long discussion approved additional funding " +
-      "for the public library system across all districts"
-    val recipe = "combine the flour sugar and butter in a large bowl then " +
-      "fold in the eggs one at a time until the batter is smooth and pour " +
-      "it into a greased pan before baking"
-    Seq((10L, article), (20L, recipe))
-      .map { case (id, text) => (id, text, "en", "srcT", text.length.toLong) }
-      .toDF("doc_id", "text", "lang", "source", "n_chars")
-      .write.mode("overwrite").parquet(s"$dir/documents.parquet")
-    dir
-  }
-
-  test("ingest dedup: within-stream collapse + corpus flag, fingerprints match batch") {
-    implicit val sq = spark.sqlContext
-    val corpusFp = IngestDedup.corpusFingerprints(spark, corpusDir)
-    val input = MemoryStream[Doc]
-    val q = IngestDedup.dedupIngest(input.toDF(), corpusFp)
-      .writeStream.format("memory").queryName("ingest").outputMode("append").start()
-    withQuery(q) {
-      input.addData(
-        // case/whitespace variant of corpus doc 1 → same fingerprint
-        Doc(ts("2024-01-01 10:00:00"), 100L, "The  Quick Brown  Fox jumps over the lazy dog"),
-        // novel document
-        Doc(ts("2024-01-01 10:01:00"), 101L, "a brand new never seen document"),
-        // exact replay of 101's text within the watermark → collapsed
-        Doc(ts("2024-01-01 10:02:00"), 102L, "a brand new never seen document"))
-      q.processAllAvailable()
-      val out = spark.table("ingest")
-        .select("doc_id", "fp", "in_corpus")
-        .as[(Long, String, Boolean)].collect()
-      // 102 collapsed into 101; 100 flagged as already-in-corpus
-      assert(out.map(_._1).sorted.toSeq == Seq(100L, 101L))
-      val byDoc = out.map(r => r._1 -> r).toMap
-      assert(byDoc(100L)._3, "corpus variant must be flagged in_corpus")
-      assert(!byDoc(101L)._3, "novel doc must not be flagged")
-      // stream-side fingerprint is byte-identical to the batch family's
-      val batchFp = corpusFp.as[String].collect().toSet
-      assert(batchFp.contains(byDoc(100L)._2))
-      assert(!batchFp.contains(byDoc(101L)._2))
-    }
-  }
-
-  test("a second batch after the first still dedups against stream state") {
-    implicit val sq = spark.sqlContext
-    val corpusFp = IngestDedup.corpusFingerprints(spark, corpusDir)
-    val input = MemoryStream[Doc]
-    val q = IngestDedup.dedupIngest(input.toDF(), corpusFp)
-      .writeStream.format("memory").queryName("ingest2").outputMode("append").start()
-    withQuery(q) {
-      input.addData(Doc(ts("2024-01-01 10:00:00"), 200L, "some streamed document text"))
-      q.processAllAvailable()
-      // same fingerprint arrives in a LATER micro-batch, inside the watermark
-      input.addData(Doc(ts("2024-01-01 10:10:00"), 201L, "Some   Streamed Document TEXT"))
-      q.processAllAvailable()
-      val ids = spark.table("ingest2").select("doc_id").as[Long].collect().toSeq
-      assert(ids == Seq(200L), s"cross-batch replay must collapse, got $ids")
-    }
-  }
-
-  test("corpus refresh mid-stream: plain static join dies, foreachBatch variant sees the new snapshot") {
-    implicit val sq = spark.sqlContext
-    def writeCorpus(dir: String, rows: Seq[(Long, String)]): Unit =
-      rows.map { case (id, text) => (id, text, "en", "srcT", text.length.toLong) }
-        .toDF("doc_id", "text", "lang", "source", "n_chars")
-        .write.mode("overwrite").parquet(s"$dir/documents.parquet")
-
-    // (a) the plain stream-static join pins its file listing at query
-    // definition: an overwrite under it fails the stream — the doc'd
-    // reason dedupIngestForeachBatch exists
-    val dirA = java.nio.file.Files.createTempDirectory("graft-refresh-a").toString
-    writeCorpus(dirA, Seq((1L, "alpha beta gamma")))
-    val inA = MemoryStream[Doc]
-    val qA = IngestDedup.dedupIngest(inA.toDF(), IngestDedup.corpusFingerprints(spark, dirA))
-      .writeStream.format("memory").queryName("refresh_a").outputMode("append").start()
-    inA.addData(Doc(ts("2024-01-01 10:00:00"), 100L, "alpha beta gamma"))
-    qA.processAllAvailable()
-    writeCorpus(dirA, Seq((1L, "alpha beta gamma"), (2L, "delta epsilon zeta")))
-    inA.addData(Doc(ts("2024-01-01 10:10:00"), 101L, "delta epsilon zeta"))
-    val died = try { qA.processAllAvailable(); false }
-      catch { case _: Throwable => true } finally qA.stop()
-    assert(died, "snapshot overwrite under a pinned file index must fail the stream")
-
-    // (b) foreachBatch re-reads the corpus each micro-batch: the
-    // post-refresh document is flagged in_corpus
-    val dirB = java.nio.file.Files.createTempDirectory("graft-refresh-b").toString
-    writeCorpus(dirB, Seq((1L, "alpha beta gamma")))
-    val got = scala.collection.mutable.ArrayBuffer.empty[(Long, Boolean)]
-    val inB = MemoryStream[Doc]
-    val qB = IngestDedup.dedupIngestForeachBatch(inB.toDF(), spark, dirB) { out =>
-      got ++= out.select("doc_id", "in_corpus").as[(Long, Boolean)].collect()
-    }
-    withQuery(qB) {
-      inB.addData(Doc(ts("2024-01-01 10:00:00"), 200L, "an unrelated first document"))
-      qB.processAllAvailable()
-      writeCorpus(dirB, Seq((1L, "alpha beta gamma"), (2L, "delta epsilon zeta")))
-      inB.addData(Doc(ts("2024-01-01 10:10:00"), 201L, "Delta  Epsilon ZETA"))
-      qB.processAllAvailable()
-    }
-    val byDoc = got.toMap
-    assert(!byDoc(200L), "before the refresh the text is novel")
-    assert(byDoc(201L), "after the refresh the same fingerprint must flag in_corpus")
-  }
-
-  test("near-dup ingest: one-sentence edit is caught across micro-batches, novel doc is not") {
-    implicit val sq = spark.sqlContext
-    val bands = IngestDedup.corpusBands(spark, nearDupDir)
-    val sigs = IngestDedup.corpusSignatures(spark, nearDupDir)
-    val input = MemoryStream[Doc]
-    val q = IngestDedup.nearDupIngest(input.toDF(), bands, sigs)
-      .writeStream.format("memory").queryName("neardup").outputMode("append").start()
-    withQuery(q) {
-      // batch 1: re-crawl of corpus doc 10 with one phrase changed —
-      // a new md5 (the exact tier would miss it) but high Jaccard
-      input.addData(Doc(ts("2024-01-01 10:00:00"), 100L,
-        "the committee met on wednesday to review the annual budget " +
-        "proposal and after a long discussion approved additional funding " +
-        "for the public library system across all districts"))
-      q.processAllAvailable()
-      // batch 2: a genuinely novel document
-      input.addData(Doc(ts("2024-01-01 10:01:00"), 101L,
-        "quantum entanglement experiments require carefully isolated " +
-        "detectors and cryogenic shielding to suppress thermal noise"))
-      q.processAllAvailable()
-      val out = spark.table("neardup")
-        .select("doc_id", "cand_id", "est_jaccard")
-        .as[(Long, Long, Double)].collect()
-      assert(out.map(_._1).toSet == Set(100L),
-        s"only the re-crawl should match, got ${out.toSeq}")
-      val hit = out.find(_._1 == 100L).get
-      assert(hit._2 == 10L, s"must match corpus doc 10, got ${hit._2}")
-      assert(hit._3 >= 0.5 && hit._3 <= 1.0, s"est_jaccard out of range: ${hit._3}")
-    }
-    graft.operators.Dedup.releaseIndexes(spark)
-  }
-
-  test("continuous maintenance loop: flag → append novels to index → restarted stream flags against the grown index") {
-    implicit val sq = spark.sqlContext
-    import org.apache.spark.sql.functions.col
-    val Dedup = graft.operators.Dedup
-    val article = "the committee met on tuesday to review the annual budget " +
-      "proposal and after a long discussion approved additional funding " +
-      "for the public library system across all districts"
-    val recipe = "combine the flour sugar and butter in a large bowl then " +
-      "fold in the eggs one at a time until the batter is smooth and pour " +
-      "it into a greased pan before baking"
-    def docRow(id: Long, text: String) = (id, text, "en", "srcT", text.length.toLong)
-
-    // Standing corpus: just the article. Index written once, then the
-    // session primed from parquet — the file-backed static sides the
-    // append-under-stream safety note requires.
-    val dir = java.nio.file.Files.createTempDirectory("graft-loop").toString
-    val idx = java.nio.file.Files.createTempDirectory("graft-loop-idx").toString
-    Seq(docRow(1L, article)).toDF("doc_id", "text", "lang", "source", "n_chars")
-      .write.mode("overwrite").parquet(s"$dir/documents.parquet")
-    Dedup.writeIndexes(spark, dir, idx, withEmbeddings = false)
-    Dedup.releaseIndexes(spark)
-    Dedup.primeIndexes(spark, dir, idx)
-
-    // Micro-batch 1: a near-copy of corpus doc 1 (must be flagged) and
-    // a novel recipe (must not be).
-    val in1 = MemoryStream[Doc]
-    val q1 = IngestDedup.nearDupIngest(in1.toDF(),
-        IngestDedup.corpusBands(spark, dir), IngestDedup.corpusSignatures(spark, dir))
-      .writeStream.format("memory").queryName("loop1").outputMode("append").start()
-    in1.addData(
-      Doc(ts("2024-01-01 10:00:00"), 100L, article.replace("tuesday", "wednesday")),
-      Doc(ts("2024-01-01 10:00:30"), 101L, recipe))
-    q1.processAllAvailable()
-    val out1 = spark.table("loop1").select("doc_id", "cand_id")
-      .as[(Long, Long)].collect().toSet
-    assert(out1 == Set((100L, 1L)),
-      s"batch 1: only the article re-crawl should flag, got $out1")
-
-    // Maintenance window, WITH q1 STILL RUNNING: route the novel doc
-    // into the corpus and grow the index artifacts. Safe because the
-    // static sides are parquet-primed (the scaladoc'd condition).
-    Seq(docRow(101L, recipe)).toDF("doc_id", "text", "lang", "source", "n_chars")
-      .write.mode("append").parquet(s"$dir/documents.parquet")
-    Dedup.appendIndexes(spark, dir, idx,
-      docPredicate = col("doc_id") === 101L, rebuildPairs = false,
-      batchId = Some("maint-1")) // keyed → a retried window is idempotent
-
-    // The running query's pinned listing serves the PRE-append corpus:
-    // another article re-crawl still flags, and nothing crashes.
-    in1.addData(Doc(ts("2024-01-01 10:01:00"), 150L, article.replace("annual", "yearly")))
-    q1.processAllAvailable()
-    val out1b = spark.table("loop1").select("doc_id", "cand_id")
-      .as[(Long, Long)].collect().toSet
-    assert(out1b.contains((150L, 1L)),
-      "append under a primed running stream must not break the probe")
-    q1.stop()
-
-    // Micro-batch 2 in a RESTARTED stream (the documented refresh
-    // semantics): a near-copy of the batch-1 novel doc is now flagged
-    // against the GROWN index.
-    val in2 = MemoryStream[Doc]
-    val q2 = IngestDedup.nearDupIngest(in2.toDF(),
-        IngestDedup.corpusBands(spark, dir), IngestDedup.corpusSignatures(spark, dir))
-      .writeStream.format("memory").queryName("loop2").outputMode("append").start()
-    withQuery(q2) {
-      in2.addData(Doc(ts("2024-01-01 11:00:00"), 200L, recipe.replace("butter", "margarine")))
-      q2.processAllAvailable()
-      val out2 = spark.table("loop2").select("doc_id", "cand_id")
-        .as[(Long, Long)].collect().toSet
-      assert(out2 == Set((200L, 101L)),
-        s"batch 2 must flag against the appended doc 101, got $out2")
-    }
-    Dedup.releaseIndexes(spark)
-  }
-
-  test("embedding near-dup ingest: planted near-copy flags against the bucket index, novel vector does not") {
-    implicit val sq = spark.sqlContext
-    val Dedup = graft.operators.Dedup
-    val rnd = new scala.util.Random(99)
-    def randVec() = Seq.fill(64)((rnd.nextGaussian() * 0.5).toFloat)
-    val corpus = (0 until 30).map(i => (i.toLong, randVec(), i % 5))
-    val dir = java.nio.file.Files.createTempDirectory("graft-emb-ingest").toString
-    corpus.toDF("vec_id", "embedding", "label")
-      .write.mode("overwrite").parquet(s"$dir/embeddings.parquet")
-    // primed static sides — the operational configuration
-    val idx = java.nio.file.Files.createTempDirectory("graft-emb-ingest-idx").toString
-    val docsStub = Seq((1L, "stub doc", "en", "s", 8L))
-      .toDF("doc_id", "text", "lang", "source", "n_chars")
-    docsStub.write.mode("overwrite").parquet(s"$dir/documents.parquet")
-    Dedup.writeIndexes(spark, dir, idx)
-    Dedup.releaseIndexes(spark)
-    Dedup.primeIndexes(spark, dir, idx)
-
-    val input = MemoryStream[Vec]
-    val q = IngestDedup.embNearDupIngest(input.toDF(),
-        IngestDedup.corpusEmbBuckets(spark, dir), IngestDedup.corpusEmbBase(spark, dir))
-      .writeStream.format("memory").queryName("embingest").outputMode("append").start()
-    withQuery(q) {
-      // batch 1: a re-ingest of corpus vec 3 with tiny drift (cos ~ 1)
-      val copy = corpus.find(_._1 == 3L).get._2
-        .map(x => x + 0.0005f * rnd.nextGaussian().toFloat)
-      input.addData(Vec(ts("2024-01-01 10:00:00"), 300L, copy))
-      q.processAllAvailable()
-      // batch 2: a genuinely novel random vector
-      input.addData(Vec(ts("2024-01-01 10:01:00"), 301L, randVec()))
-      q.processAllAvailable()
-      val out = spark.table("embingest")
-        .select("vec_id", "cand_id", "cos").as[(Long, Long, Double)].collect()
-      assert(out.map(_._1).toSet == Set(300L),
-        s"only the re-ingested copy should flag, got ${out.toSeq}")
-      val hit = out.find(_._1 == 300L).get
-      assert(hit._2 == 3L, s"must match corpus vec 3, got ${hit._2}")
-      assert(hit._3 >= 0.99, s"planted copy should score ~1, got ${hit._3}")
-    }
-    // maintenance: append the novel vector to the corpus + artifacts,
-    // restart — a near-copy of IT must now flag (the embedding tier's
-    // continuous-maintenance loop)
-    val novel = randVec()
-    (Seq((400L, novel, 1)) ++ Seq.empty)
-      .toDF("vec_id", "embedding", "label")
-      .write.mode("append").parquet(s"$dir/embeddings.parquet")
-    import org.apache.spark.sql.functions.col
-    Dedup.appendIndexes(spark, dir, idx,
-      docPredicate = col("doc_id") < 0L,
-      embPredicate = Some(col("vec_id") === 400L), rebuildPairs = false,
-      batchId = Some("maint-emb-1"))
-    val in2 = MemoryStream[Vec]
-    val q2 = IngestDedup.embNearDupIngest(in2.toDF(),
-        IngestDedup.corpusEmbBuckets(spark, dir), IngestDedup.corpusEmbBase(spark, dir))
-      .writeStream.format("memory").queryName("embingest2").outputMode("append").start()
-    withQuery(q2) {
-      in2.addData(Vec(ts("2024-01-01 11:00:00"), 500L,
-        novel.map(x => x + 0.0005f * rnd.nextGaussian().toFloat)))
-      q2.processAllAvailable()
-      val out2 = spark.table("embingest2")
-        .select("vec_id", "cand_id").as[(Long, Long)].collect().toSet
-      assert(out2 == Set((500L, 400L)),
-        s"restarted stream must flag against the appended vector, got $out2")
-    }
-    Dedup.releaseIndexes(spark)
-  }
-
-  test("exactly-once sink: kill mid-batch, checkpointed replay lands no duplicates and skips committed batches") {
-    import org.apache.spark.sql.functions.col
-    implicit val sq = spark.sqlContext
-    val outDir = java.nio.file.Files.createTempDirectory("graft-eo-out").toString
-    val ckpt = java.nio.file.Files.createTempDirectory("graft-eo-ckpt").toString
-    // target: one line-file per doc_id, plus an append-only attempt LOG
-    // so duplicate SIDE EFFECTS (not just final state) are observable
-    val attempts = new java.util.concurrent.ConcurrentLinkedQueue[(Long, Long)]()
-    val writeCalls = new java.util.concurrent.atomic.AtomicLong(0)
-    @volatile var failOnce = true
-    def start(input: MemoryStream[Doc]): StreamingQuery = {
-      val land = graft.sinks.Sinks.exactlyOnceBatch(s"$outDir/_commits") {
-        (batch: org.apache.spark.sql.DataFrame, batchId: Long) =>
-          writeCalls.incrementAndGet()
-          val rows = batch.select(col("doc_id")).collect().map(_.getLong(0)).sorted
-          // first row of the batch lands BEFORE the injected crash —
-          // the partial effect a replay must overwrite, not duplicate
-          rows.headOption.foreach { id =>
-            attempts.add((batchId, id))
-            java.nio.file.Files.writeString(
-              java.nio.file.Paths.get(s"$outDir/doc-$id.json"), s"""{"doc_id":$id}""")
-          }
-          if (failOnce) { failOnce = false; sys.error("injected mid-batch crash") }
-          rows.drop(1).foreach { id =>
-            attempts.add((batchId, id))
-            java.nio.file.Files.writeString(
-              java.nio.file.Paths.get(s"$outDir/doc-$id.json"), s"""{"doc_id":$id}""")
-          }
-      }
-      input.toDF().writeStream
-        .option("checkpointLocation", ckpt)
-        .outputMode("append")
-        .foreachBatch(land)
-        .start()
-    }
-    val in1 = MemoryStream[Doc]
-    in1.addData(Doc(ts("2024-01-01 10:00:00"), 100L, "alpha"),
-      Doc(ts("2024-01-01 10:00:01"), 101L, "beta"))
-    val q1 = start(in1)
-    val died = try { q1.processAllAvailable(); false }
-      catch { case _: Throwable => true } finally q1.stop()
-    assert(died, "the injected crash must fail the first attempt")
-    assert(!new java.io.File(s"$outDir/_commits/batch-0").exists(),
-      "a crashed batch must not publish its commit marker")
-    // restart from the SAME checkpoint: batch 0 replays with the same id
-    val in2 = MemoryStream[Doc]
-    in2.addData(Doc(ts("2024-01-01 10:00:00"), 100L, "alpha"),
-      Doc(ts("2024-01-01 10:00:01"), 101L, "beta"))
-    val q2 = start(in2)
-    withQuery(q2) { q2.processAllAvailable() }
-    val files = new java.io.File(outDir).listFiles().map(_.getName)
-      .filter(_.startsWith("doc-")).sorted.toSeq
-    assert(files == Seq("doc-100.json", "doc-101.json"),
-      s"replay must land each doc exactly once, got $files")
-    assert(new java.io.File(s"$outDir/_commits/batch-0").exists(),
-      "the completed replay must publish the commit marker")
-    // doc 100 was written twice (partial attempt + replay) but onto the
-    // same key — idempotent overwrite, not duplication
-    import scala.jdk.CollectionConverters._
-    assert(attempts.asScala.count(_._2 == 100L) == 2)
-    assert(attempts.asScala.count(_._2 == 101L) == 1)
-    // a third run over the same checkpoint re-fires foreachBatch for
-    // nothing new; re-delivering an ALREADY-COMMITTED batch id must
-    // skip the sink body entirely
-    val callsBefore = writeCalls.get()
-    val committed = graft.sinks.Sinks.exactlyOnceBatch(s"$outDir/_commits") {
-      (_: org.apache.spark.sql.DataFrame, _: Long) =>
-        writeCalls.incrementAndGet(); ()
-    }
-    committed(spark.range(1).toDF(), 0L)
-    assert(writeCalls.get() == callsBefore,
-      "a committed batchId must cause zero sink I/O on redelivery")
-  }
-
-  test("stream-side minhashOfText is byte-identical to the batch signature artifact") {
-    import org.apache.spark.sql.functions.col
-    val batch = graft.operators.Dedup.minhashSignatures(spark, nearDupDir)
-      .as[(Long, Seq[Long])].collect().toMap
-    val streamExpr = spark.read.parquet(s"$nearDupDir/documents.parquet")
-      .select(col("doc_id"), graft.operators.Dedup.minhashOfText(col("text")).as("sig"))
-      .as[(Long, Seq[Long])].collect().toMap
-    assert(streamExpr == batch,
-      "minhashOfText must reproduce the batch pipeline's signatures exactly")
-    graft.operators.Dedup.releaseIndexes(spark)
-  }
-
   test("signature parity holds over 50 seeded random documents") {
-    import org.apache.spark.sql.functions.col
     // varied lengths, repeated tokens, mixed case/whitespace — the
     // parity must hold on arbitrary text, not just the fixtures
     val rnd = new scala.util.Random(77)
@@ -413,64 +25,12 @@ class IngestDedupSpec extends SparkSpec {
     val dir = java.nio.file.Files.createTempDirectory("graft-parity").toString
     docs.toDF("doc_id", "text", "lang", "source", "n_chars")
       .write.mode("overwrite").parquet(s"$dir/documents.parquet")
-    val batch = graft.operators.Dedup.minhashSignatures(spark, dir)
+    val batch = Dedup.minhashSignatures(spark, dir)
       .as[(Long, Seq[Long])].collect().toMap
     val expr = spark.read.parquet(s"$dir/documents.parquet")
-      .select(col("doc_id"), graft.operators.Dedup.minhashOfText(col("text")).as("sig"))
+      .select(col("doc_id"), Dedup.minhashOfText(col("text")).as("sig"))
       .as[(Long, Seq[Long])].collect().toMap
     assert(batch.size == 50 && expr == batch)
-    graft.operators.Dedup.releaseIndexes(spark)
-  }
-
-  test("streaming token accounting matches the batch BPE counts row-for-row") {
-    implicit val sq = spark.sqlContext
-    import org.apache.spark.sql.functions.col
-    val input = MemoryStream[Doc]
-    val q = IngestDedup.tokenAccounting(input.toDF())
-      .writeStream.format("memory").queryName("tokacct").outputMode("append").start()
-    val docs = Seq(
-      Doc(ts("2024-01-01 10:00:00"), 1L, "the quick brown fox jumps over the lazy dog"),
-      Doc(ts("2024-01-01 10:00:01"), 2L, "Spark  TABLE value\nmerge batch sort"),
-      Doc(ts("2024-01-01 10:00:02"), 3L, "   "), // whitespace-only → 0 BPE tokens
-      Doc(ts("2024-01-01 10:00:03"), 4L, "xyzzy"))
-    withQuery(q) {
-      input.addData(docs: _*)
-      q.processAllAvailable()
-      val streamed = spark.table("tokacct")
-        .select("doc_id", "ws_tokens", "bpe_tokens", "chars_per_token")
-        .as[(Long, Long, Long, Double)].collect()
-        .map { case (id, ws, bpe, cpt) => id -> ((ws, bpe, cpt)) }.toMap
-      // batch twin over the identical documents (TextAnalysis.bpeTokenCount
-      // shape, minus the stream's ts column)
-      val dir = java.nio.file.Files.createTempDirectory("graft-tokacct").toString
-      docs.map(d => (d.doc_id, d.text, "en", "srcT", d.text.length.toLong))
-        .toDF("doc_id", "text", "lang", "source", "n_chars")
-        .write.mode("overwrite").parquet(s"$dir/documents.parquet")
-      val batch = graft.operators.TextAnalysis.bpeTokenCount(spark, dir)
-        .select("doc_id", "ws_tokens", "bpe_tokens", "chars_per_token")
-        .as[(Long, Long, Long, Double)].collect()
-        .map { case (id, ws, bpe, cpt) => id -> ((ws, bpe, cpt)) }.toMap
-      assert(streamed == batch,
-        s"stream token accounting diverged from batch: $streamed vs $batch")
-    }
-  }
-
-  test("streaming token accounting under a LEARNED merge table matches the learned batch kernel") {
-    implicit val sq = spark.sqlContext
-    import org.apache.spark.sql.functions.col
-    // a tiny learned table: merges 'th' then 'the' — enough to prove the
-    // learned constant rides the stream expression, not the fixed table
-    val merges = Seq(("t", "h"), ("th", "e"))
-    val input = MemoryStream[Doc]
-    val q = IngestDedup.tokenAccounting(input.toDF(), Some(merges))
-      .writeStream.format("memory").queryName("tokacctfit").outputMode("append").start()
-    withQuery(q) {
-      input.addData(Doc(ts("2024-01-01 10:00:00"), 1L, "the thee tx"))
-      q.processAllAvailable()
-      val got = spark.table("tokacctfit")
-        .select("doc_id", "bpe_tokens").as[(Long, Long)].collect().toMap
-      // "the"→[the]=1, "thee"→[the,e]=2, "tx"→[t,x]=2 ⇒ 5 subwords
-      assert(got == Map(1L -> 5L), s"learned-table stream count wrong: $got")
-    }
+    Dedup.releaseIndexes(spark)
   }
 }

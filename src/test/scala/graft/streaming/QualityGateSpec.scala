@@ -1,24 +1,17 @@
 package graft.streaming
 
-import java.sql.Timestamp
-
 import graft.SparkSpec
 import graft.operators.TextAnalysis
-import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-import org.apache.spark.sql.streaming.StreamingQuery
 
-/** Streaming NB quality gate: streamed micro-batch scores must be
-  * byte-identical to the batch q_quality_nb scores (same tokenizer,
-  * kernel, and DECIMAL discipline), and out-of-vocabulary text must
-  * degrade to the disclosed prior-only semantics, not diverge. */
+/** The NB quality gate ([[TextAnalysis.scoreBatch]]) replayed over
+  * micro-batches: scores must be byte-identical to the batch
+  * q_quality_nb scores (same tokenizer, kernel, and DECIMAL
+  * discipline), and out-of-vocabulary text must degrade to the
+  * disclosed prior-only semantics, not diverge. */
 class QualityGateSpec extends SparkSpec {
   import spark.implicits._
 
-  case class Doc(ts: Timestamp, doc_id: Long, text: String)
-  private def ts(s: String) = Timestamp.valueOf(s)
-
-  private def withQuery[T](q: StreamingQuery)(body: => T): T =
-    try body finally q.stop()
+  case class Doc(doc_id: Long, text: String)
 
   /** Same separable fixture as TextAnalysisSpec's NB test: 4 Gopher
     * pass docs vs 6 junk docs. */
@@ -32,28 +25,23 @@ class QualityGateSpec extends SparkSpec {
     dir
   }
 
+  private def gate(dir: String, docs: Seq[Doc]): Seq[(Long, Double, String)] =
+    MicroBatchReplay(spark, docs) { batch =>
+      TextAnalysis.scoreBatch(batch, TextAnalysis.nbQualityModel(spark, dir))
+        .select("doc_id", "nb_score", "nb_pred")
+    }.map(r => (r.getLong(0), r.getDouble(1), r.getString(2)))
+
   test("streamed scores are bit-identical to batch q_quality_nb; OOV text scores the prior") {
-    implicit val sq = spark.sqlContext
     val batchScores = TextAnalysis.nbQualityScore(spark, corpusDir).collect()
       .map(r => r.getLong(0) -> (r.getDouble(1), r.getString(2))).toMap
     val prior = TextAnalysis.nbQualityModel(spark, corpusDir)
       .filter("term IS NULL").collect()(0).getDouble(3)
-    val collected = scala.collection.mutable.ArrayBuffer.empty[(Long, Double, String)]
-    val input = MemoryStream[Doc]
-    val q = QualityGate.qualityGateIngest(input.toDF(), spark, corpusDir) { scored =>
-      collected ++= scored.select("doc_id", "nb_score", "nb_pred").collect()
-        .map(r => (r.getLong(0), r.getDouble(1), r.getString(2)))
-    }
-    withQuery(q) {
-      input.addData(
-        // the corpus texts re-arriving on the stream
-        Doc(ts("2024-01-01 10:00:00"), 101L,
-          Array.fill(6)("the be to of and that have with good clean").mkString(" ")),
-        Doc(ts("2024-01-01 10:00:01"), 102L, "zz qq ww"),
-        // fully out-of-vocabulary → prior-only, the batch NULL-text path
-        Doc(ts("2024-01-01 10:00:02"), 103L, "unseen vocabulary entirely"))
-      q.processAllAvailable()
-    }
+    val collected = gate(corpusDir, Seq(
+      // the corpus texts re-arriving on the stream
+      Doc(101L, Array.fill(6)("the be to of and that have with good clean").mkString(" ")),
+      Doc(102L, "zz qq ww"),
+      // fully out-of-vocabulary → prior-only, the batch NULL-text path
+      Doc(103L, "unseen vocabulary entirely")))
     val out = collected.map(t => t._1 -> (t._2, t._3)).toMap
     assert(out.size == 3, s"expected 3 scored docs: $collected")
     // stream ≡ batch, pinned against the corpus docs with the same text
@@ -66,61 +54,20 @@ class QualityGateSpec extends SparkSpec {
   }
 
   test("the registered q_stream_parity_quality checksums equal a streamed replay of the same fixed batch") {
-    // the driver-gate head replays the even-doc_id slice through the
-    // BATCH kernel; this closes the loop on the real testdata corpus:
-    // the same slice streamed through qualityGateIngest must reduce to
-    // the identical checksum row, so the gate query really does stand
-    // in for the streaming head it twins
-    implicit val sq = spark.sqlContext
+    // the registered head scores the even-doc_id slice through the
+    // batch kernel; on the real testdata corpus the same slice replayed
+    // over a stream must reduce to the identical checksum row
     val dir = sf("sf0.001")
     val exp = graft.SparkEntry.queries("q_stream_parity_quality")(spark, dir)
       .collect()(0)
     val batch = graft.sources.Tables.documents(spark, dir)
       .filter("doc_id % 2 = 0").select("doc_id", "text").collect()
-      .map(r => Doc(ts("2024-01-01 10:00:00"), r.getLong(0),
-        if (r.isNullAt(1)) null else r.getString(1)))
-    val rows = scala.collection.mutable.ArrayBuffer.empty[(Long, Double, String)]
-    val input = MemoryStream[Doc]
-    val q = QualityGate.qualityGateIngest(input.toDF(), spark, dir) { scored =>
-      rows ++= scored.select("doc_id", "nb_score", "nb_pred").collect()
-        .map(r => (r.getLong(0), r.getDouble(1), r.getString(2)))
-    }
-    withQuery(q) {
-      input.addData(batch.toSeq)
-      q.processAllAvailable()
-    }
+      .map(r => Doc(r.getLong(0), if (r.isNullAt(1)) null else r.getString(1)))
+    val rows = gate(dir, batch.toSeq)
     assert(rows.size.toLong == exp.getLong(0), "n_rows")
     assert(rows.count(_._3 == "pass").toLong == exp.getLong(1), "n_pass")
     assert(rows.map(t => math.round(t._2 * 1e6)).sum == exp.getLong(2), "chk_score")
     assert(rows.map(t => if (t._3 == "pass") t._1 else -t._1).sum == exp.getLong(3),
       "chk_doc")
-  }
-
-  test("model refresh between micro-batches is picked up without a stream restart") {
-    implicit val sq = spark.sqlContext
-    // prime the session memo with a POISONED model (prior-only, huge
-    // positive prior, no terms): batch 1 must score with it; after
-    // dropping the poisoned entry, batch 2 must score with the real
-    // trained model — proving per-batch model resolution, the
-    // refreshable-static-side contract
-    val poisoned = Seq((Option.empty[String], 0L, 0L, 99.0))
-      .toDF("term", "n_pass", "n_reject", "llr")
-    graft.operators.Dedup.memoPut(spark, s"nbQualityModel|$corpusDir", poisoned)
-    val collected = scala.collection.mutable.ArrayBuffer.empty[(Long, Double)]
-    val input = MemoryStream[Doc]
-    val q = QualityGate.qualityGateIngest(input.toDF(), spark, corpusDir) { scored =>
-      collected ++= scored.select("doc_id", "nb_score").collect()
-        .map(r => (r.getLong(0), r.getDouble(1)))
-    }
-    withQuery(q) {
-      input.addData(Doc(ts("2024-01-01 10:00:00"), 201L, "zz qq ww"))
-      q.processAllAvailable()
-      graft.operators.Dedup.memoDrop(spark, s"nbQualityModel|$corpusDir")
-      input.addData(Doc(ts("2024-01-01 10:00:01"), 202L, "zz qq ww"))
-      q.processAllAvailable()
-    }
-    val out = collected.toMap
-    assert(out(201L) == 99.0, s"batch 1 must serve the primed model: $collected")
-    assert(out(202L) < 0, s"batch 2 must serve the refreshed (trained) model: $collected")
   }
 }
